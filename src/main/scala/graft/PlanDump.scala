@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round helper: writes `.explain("formatted")` for the named
@@ -25,16 +24,7 @@ object PlanDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = Paths.get(sys.env.getOrElse("PLAN_OUT", "plans/r21"))
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.driver(cpus)
     // PLAN_FINAL=1 (r22): execute the query and append the FINAL adaptive
     // plan — the only place AQE stage reuse (ReusedExchange) is visible;
     // the static explain prints duplicated subtrees that may or may not

@@ -29,15 +29,20 @@ object Readers {
 
   private val ProbeBytes = 1 << 20
 
-  /** First data file under `path` (a file, or a Spark CSV output dir). */
+  /** First data file under `path` (a file, or a Spark CSV output dir).
+    * The directory listing is closed here: an unclosed `Files.list`
+    * holds a directory handle, and every charset probe lists again. */
   private def firstDataFile(path: String): Option[Path] = {
     val p = Paths.get(path)
     if (Files.isRegularFile(p)) Some(p)
-    else if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala
+    else if (Files.isDirectory(p)) {
+      val listing = Files.list(p)
+      try listing.iterator().asScala
         .filter(f => Files.isRegularFile(f) && !f.getFileName.toString.startsWith(".") &&
           !f.getFileName.toString.startsWith("_"))
-        .toSeq.sortBy(_.getFileName.toString).headOption
+        .toVector.sortBy(_.getFileName.toString).headOption
+      finally listing.close()
+    }
     else None
   }
 

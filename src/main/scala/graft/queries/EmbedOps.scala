@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.sources.AnnIndex
 
 /** Similarity-search operators over the `embeddings` table
   * (vec_id BIGINT, embedding ARRAY<FLOAT>, label INT).
@@ -31,18 +32,12 @@ object EmbedOps {
   private def quant(c: Column): Column =
     transform(c, x => round(x.cast("double") * 1000).cast("long"))
 
-  /** Exact integer squared norm (native dot with itself). */
-  private def norm2(v: Column): Column = dotL(v, v)
-
-  /** Exact integer dot product / cosine — delegates to the ONE
-    * canonical definition in [[graft.sources.AnnIndex]] (a precision
-    * or codegen tweak there must reach the gate oracle path and the
-    * index serve path together; review r18). */
-  private def dotL(a: Column, b: Column): Column =
-    graft.sources.AnnIndex.dotL(a, b)
-
-  private def cosine(dot: Column, n1: Column, n2: Column): Column =
-    graft.sources.AnnIndex.cosine(dot, n1, n2)
+  /** Exact integer squared norm (native dot with itself). The vector
+    * math (dotL, cosine, cellDist, withCentNorm, centroidTable) has
+    * ONE definition, in [[AnnIndex]]: a precision or codegen tweak
+    * there must reach the gate path and the index serve path together
+    * (review r18). */
+  private def norm2(v: Column): Column = AnnIndex.dotL(v, v)
 
   /** Sign code for one 32-dim half of a quantized vector `q`: a fold
     * acc*2 + (x>0) — the first element lands on the word's high bit,
@@ -78,20 +73,6 @@ object EmbedOps {
         .parquet(java.nio.file.Paths.get(p, "rows").toString)
     } + "/rows")
 
-  /** Cluster a cell-partitioned layer write by its partition column(s)
-    * before `partitionBy` — the gate-local twin of
-    * [[graft.sources.AnnIndex.clusterForWrite]] (guide §6 small files +
-    * §2.5 scale-adaptive): an un-clustered partitioned write emits one
-    * file per (task × cell) — r22 census: q217's fold layer 86 files
-    * avg 3.5 KB, q214's fragment layer 62 avg 1.4 KB, q224's tombstones
-    * 68 avg 256 B — and every later serve/fold read plus the write
-    * commit pays per-file overhead. AQE REBALANCE both coalesces small
-    * cells into shared write tasks (~one file per cell locally) and
-    * splits an oversized cell at the advisory partition size, so no
-    * skewed single-task write at 100 TB either. */
-  private def clusterForWrite(df: DataFrame, cols: String*): DataFrame =
-    graft.sources.AnnIndex.clusterForWrite(df, cols: _*)
-
   private val oQuant =
     "list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT)"
   private val oNorm2 = "list_sum(list_transform(q, a -> a * a))"
@@ -100,22 +81,8 @@ object EmbedOps {
   private def oDotHalf(a: String, b: String): String =
     s"list_sum(list_transform(range(${DIM / 2}), i -> $a[i+1] * $b[i+1]))"
 
-  /** Count-normalized probe/assign distance ||q - sv/c||^2 — the ONE
-    * engine-wide definition (r18 advice: the old cross-multiplied
-    * integer form c^2*||q - sv/c||^2 biased probing toward low-count
-    * cells; see [[graft.sources.AnnIndex.cellDist]] for the
-    * exactness + cross-engine-determinism argument). */
-  private def cellDist(qv: Column, sv: Column, c: Column,
-      qn: Column, sn: Column): Column =
-    graft.sources.AnnIndex.cellDist(qv, sv, c, qn, sn)
-
-  /** Per-cell ||sv||^2 staged before the query crossJoin — see
-    * [[graft.sources.AnnIndex.withCentNorm]]. */
-  private def withCentNorm(cents: DataFrame): DataFrame =
-    graft.sources.AnnIndex.withCentNorm(cents)
-
-  /** The oracle twin of [[cellDist]]: exact HUGEINT numerator (order-
-    * independent integer sum, no 64-bit wrap), ONE correctly-rounded
+  /** The oracle twin of [[AnnIndex.cellDist]]: exact HUGEINT numerator
+    * (order-independent integer sum, no 64-bit wrap), ONE correctly-rounded
     * cast to DOUBLE, denominator a product of exactly-representable
     * doubles — the same IEEE op sequence Spark's decimal path runs,
     * so the ranking doubles are bit-identical across engines. */
@@ -208,7 +175,8 @@ object EmbedOps {
         .select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn"))
       val pairs = corpus.join(broadcast(qs), col("vec_id") =!= col("qid"))
         .withColumn("cos",
-          cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
+          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
+            col("qn"), col("nn")))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("cos").desc, col("vec_id").asc)
       pairs.withColumn("rnk", row_number().over(w))
@@ -267,8 +235,8 @@ object EmbedOps {
       val qs = corpus.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn"))
       // count-normalized distance to every centroid mean: ||q - sv/c||²
-      val dist = qs.crossJoin(broadcast(withCentNorm(centroids)))
-        .withColumn("d", cellDist(col("qv"), col("sv"), col("c"),
+      val dist = qs.crossJoin(broadcast(AnnIndex.withCentNorm(centroids)))
+        .withColumn("d", AnnIndex.cellDist(col("qv"), col("sv"), col("c"),
           col("qn"), col("sn")))
       val wp = Window.partitionBy(col("qid")).orderBy(col("d").asc, col("label").asc)
       val probe = dist.withColumn("pr", row_number().over(wp))
@@ -278,7 +246,8 @@ object EmbedOps {
       val cand = corpus.join(broadcast(probe),
           corpus("label") === probe("label") && col("vec_id") =!= col("qid"))
         .withColumn("cos",
-          cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
+          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
+            col("qn"), col("nn")))
       val wr = Window.partitionBy(col("qid"))
         .orderBy(col("cos").desc, col("vec_id").asc)
       cand.withColumn("rnk", row_number().over(wr))
@@ -354,7 +323,7 @@ object EmbedOps {
           .agg(count(lit(1)).as("c"))
         cent.join(cnt, "label").write.mode("overwrite")
           .parquet(java.nio.file.Paths.get(p, "centroids").toString)
-        clusterForWrite(quantized(s, dir), "label")
+        AnnIndex.clusterForWrite(quantized(s, dir), "label")
           .write.mode("overwrite").partitionBy("label")
           .parquet(java.nio.file.Paths.get(p, "vectors").toString)
       }
@@ -363,8 +332,8 @@ object EmbedOps {
       val qs = quantized(s, dir)
         .filter(col("vec_id") >= 5 && col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn"))
-      val dist = qs.crossJoin(broadcast(withCentNorm(centroids)))
-        .withColumn("d", cellDist(col("qv"), col("sv"), col("c"),
+      val dist = qs.crossJoin(broadcast(AnnIndex.withCentNorm(centroids)))
+        .withColumn("d", AnnIndex.cellDist(col("qv"), col("sv"), col("c"),
           col("qn"), col("sn")))
       val wp = Window.partitionBy(col("qid")).orderBy(col("d").asc, col("label").asc)
       val probe = dist.withColumn("pr", row_number().over(wp))
@@ -378,7 +347,8 @@ object EmbedOps {
       val cand = stored.join(broadcast(probe),
           stored("label") === probe("label") && col("vec_id") =!= col("qid"))
         .withColumn("cos",
-          cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
+          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
+            col("qn"), col("nn")))
       val wr = Window.partitionBy(col("qid"))
         .orderBy(col("cos").desc, col("vec_id").asc)
       cand.withColumn("rnk", row_number().over(wr))
@@ -461,7 +431,8 @@ object EmbedOps {
       cand
         .join(sig.select(col("vec_id").as("ia"), col("q").as("qa"), col("nn").as("na")), "ia")
         .join(sig.select(col("vec_id").as("ib"), col("q").as("qb"), col("nn").as("nb")), "ib")
-        .withColumn("cos", cosine(dotL(col("qa"), col("qb")), col("na"), col("nb")))
+        .withColumn("cos", AnnIndex.cosine(AnnIndex.dotL(col("qa"), col("qb")),
+          col("na"), col("nb")))
         .filter(col("cos") >= 0.4)
         .select(col("ia").as("id_a"), col("ib").as("id_b"),
           round(col("cos"), 6).as("cosine"))
@@ -526,7 +497,8 @@ object EmbedOps {
           .agg(collect_list(struct(col("k"), col("c"), col("cn"))).as("cs"))
         v.crossJoin(broadcast(centArr))
           .withColumn("best", array_min(transform(col("cs"), e =>
-            struct((col("qn") - lit(2L) * dotL(col("q"), e.getField("c")) +
+            struct((col("qn") - lit(2L) *
+                AnnIndex.dotL(col("q"), e.getField("c")) +
               e.getField("cn")).as("d"),
               e.getField("k").as("k")))))
           .select(col("vec_id"), col("q"),
@@ -577,7 +549,8 @@ object EmbedOps {
       val b = nz.select(col("label").as("lb"), col("vec_id").as("ib"),
         col("q").as("qb"), col("nn").as("nb"))
       a.join(b, col("label") === col("lb") && col("ia") < col("ib"))
-        .withColumn("cos", cosine(dotL(col("qa"), col("qb")), col("na"), col("nb")))
+        .withColumn("cos", AnnIndex.cosine(AnnIndex.dotL(col("qa"), col("qb")),
+          col("na"), col("nb")))
         .groupBy(col("label").as("cell"))
         .agg(count(lit(1)).as("n_pairs"),
           H.cnt(col("cos") >= 0.3).as("n_ge_03"),
@@ -651,7 +624,8 @@ object EmbedOps {
             .agg(collect_list(struct(col("k"), col("c"), col("cn"))).as("cs"))
           vj.crossJoin(broadcast(centArr))
             .withColumn("best", array_min(transform(col("cs"), e =>
-              struct((col("qn") - lit(2L) * dotL(col("q"), e.getField("c")) +
+              struct((col("qn") - lit(2L) *
+                  AnnIndex.dotL(col("q"), e.getField("c")) +
                 e.getField("cn")).as("d"),
                 e.getField("k").as("k")))))
             .select(col("vec_id"), col("q"),
@@ -729,7 +703,7 @@ object EmbedOps {
       // row, per-vector argmin with ties to the lowest k — no shuffle
       val a = nz.crossJoin(broadcast(seedArr))
         .withColumn("best", array_min(transform(col("cs"), e =>
-          struct((col("nn") - lit(2L) * dotL(col("q"), e.getField("c")) +
+          struct((col("nn") - lit(2L) * AnnIndex.dotL(col("q"), e.getField("c")) +
             e.getField("cn")).as("d"), e.getField("k").as("k")))))
         .select(col("vec_id"), col("q"), col("nn"),
           col("best").getField("k").as("k"))
@@ -741,7 +715,7 @@ object EmbedOps {
       val xb = a.select(col("k"), col("vec_id").as("ib"),
         col("q").as("qb"), col("nn").as("nb"))
       val drops = xa.join(xb, "k").filter(col("ia") < col("ib"))
-        .filter(cosine(dotL(col("qa"), col("qb")),
+        .filter(AnnIndex.cosine(AnnIndex.dotL(col("qa"), col("qb")),
           col("na"), col("nb")) >= 0.4)
         .select(col("ib").as("vec_id")).distinct()
         .withColumn("dropped", lit(1))
@@ -807,7 +781,8 @@ object EmbedOps {
           .orderBy(col("cos").desc, col("vec_id").asc)
         corpus.join(broadcast(qs), col("vec_id") =!= col("qid"))
           .withColumn("cos",
-            cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
+            AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
+              col("qn"), col("nn")))
           .withColumn("rnk", row_number().over(w))
           .filter(col("rnk") <= 5)
           .select(col("qid"), col("vec_id").as("neighbor_id"))
@@ -897,7 +872,8 @@ object EmbedOps {
       val exact = full
         .join(broadcast(qs.drop("qlo", "qhi")), col("vec_id") =!= col("qid"))
         .withColumn("cos",
-          cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
+          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
+            col("qn"), col("nn")))
         .withColumn("rnk", row_number().over(wCos))
         .filter(col("rnk") <= 5)
         .select(col("qid"), col("vec_id").as("neighbor_id"))
@@ -1016,7 +992,8 @@ object EmbedOps {
           full("vec_id") === cand("neighbor_id"))
         .join(broadcast(qs.drop("qlo", "qhi")), Seq("qid"))
         .withColumn("cos",
-          cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
+          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
+            col("qn"), col("nn")))
         .withColumn("rnk", row_number().over(wRe))
         .filter(col("rnk") <= 5)
         .select(col("qid"), col("neighbor_id"), col("rnk"))
@@ -1029,7 +1006,8 @@ object EmbedOps {
       val exact = full
         .join(broadcast(qs.drop("qlo", "qhi")), col("vec_id") =!= col("qid"))
         .withColumn("cos",
-          cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
+          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
+            col("qn"), col("nn")))
         .withColumn("rnk", row_number().over(wCos))
         .filter(col("rnk") <= 5)
         .select(col("qid"), col("vec_id").as("neighbor_id"))
@@ -1099,8 +1077,8 @@ object EmbedOps {
       // (other-label ranking, same-label floor) read from it
       val scored = full
         .join(broadcast(qs), col("vec_id") =!= col("qid"))
-        .withColumn("dot", dotL(col("qv"), col("q")))
-        .withColumn("cos", cosine(col("dot"), col("qn"), col("nn")))
+        .withColumn("dot", AnnIndex.dotL(col("qv"), col("q")))
+        .withColumn("cos", AnnIndex.cosine(col("dot"), col("qn"), col("nn")))
         .select("qid", "qlab", "vec_id", "label", "dot", "cos")
       val wNeg = Window.partitionBy(col("qid"))
         .orderBy(col("cos").desc, col("vec_id").asc)
@@ -1129,10 +1107,11 @@ object EmbedOps {
         "the count-normalized centroid score ||q - sv/c||^2 " +
         "(broadcast the tiny centroid table, map-only over the batch; " +
         "exact integer numerator, deterministic double normalization " +
-        "— the q113 ranking); (2) PERSIST the batch as a cell-partitioned " +
-        "DELTA FRAGMENT beside the immutable base (r15 verdict item " +
-        "2: a managed Scratch artifact now, not a temp overlay — " +
-        "q212 is the nightly fold that merges it back); (3) update " +
+        "— the q113 ranking); (2) PERSIST each arrival commit as a " +
+        "cell-partitioned DELTA FRAGMENT beside the immutable base " +
+        "(AnnIndex.sync over the table's change feed, built once as a " +
+        "Scratch artifact — q212 is the nightly fold that merges the " +
+        "fragments back); (3) update " +
         "centroids by ADDING the fragment's per-cell integer " +
         "sums/counts to the stored ones (exact — integer centroid " +
         "state is associative, which float means are not). Serving " +
@@ -1143,32 +1122,10 @@ object EmbedOps {
         "batch + metadata, never the corpus — the difference between " +
         "a nightly full rebuild and a continuously-fresh index.",
       Some(annIncOracle)) { (s, dir) =>
-      val idx = ivfIncBase(s, dir)
-      val delta = annIncDelta(s, dir)
-      // updated centroids = stored + the fragment's per-cell integer
-      // sums (tiny on both sides; broadcast the delta aggregates)
-      val upd = foldedCentroids(s, idx, delta)
-      // ---- serve path: probe UPDATED centroids, scan only probed
-      // cells of base + delta (partition pruning on both layers)
-      val qs = s.read.parquet(s"$idx/vectors").filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      val dist = qs.crossJoin(broadcast(withCentNorm(upd)))
-        .withColumn("d", cellDist(col("qv"), col("sv"), col("c"),
-          col("qn"), col("sn")))
-      val wp = Window.partitionBy(col("qid"))
-        .orderBy(col("d").asc, col("label").asc)
-      val probe = dist.withColumn("pr", row_number().over(wp))
-        .filter(col("pr") <= 2)
-        .select(col("qid"), col("label"), col("qv"), col("qn"))
-      val cells = probe.select("label").distinct().collect().map(_.get(0))
-      val pool = s.read.parquet(s"$idx/vectors")
-        .filter(col("label").isin(cells: _*))
-        .withColumn("is_new", lit(false))
-        .unionByName(s.read.parquet(s"$delta/vectors")
-          .filter(col("label").isin(cells: _*))
-          .withColumn("is_new", lit(true)))
-      annIncServe(pool, probe)
+      // the Scratch-built index holds base + the three synced arrival
+      // fragments; the serve probes the fragment-folded centroid state
+      // and reads only probed cells of both layers
+      annServe(s, dir, annIncTable(s, dir))
     },
 
     Q("q212_ann_delta_fold",
@@ -1190,42 +1147,7 @@ object EmbedOps {
         "fragment size + affected cells, not corpus size — the " +
         "compaction half of an LSM index, scheduled off-peak.",
       Some(annIncOracle)) { (s, dir) =>
-      val idx = ivfIncBase(s, dir)
-      val delta = annIncDelta(s, dir)
-      val folded = graft.core.Scratch.materialize("ivf_inc_folded",
-        s"v3|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
-        clusterForWrite(annFoldInput(s, idx, delta), "label")
-          .write.partitionBy("label")
-          .parquet(java.nio.file.Paths.get(p, "cells").toString)
-        foldedCentroids(s, idx, delta).write
-          .parquet(java.nio.file.Paths.get(p, "centroids").toString)
-      }
-      // ---- serve AFTER the fold: folded centroids; probed cells
-      // route to the folded overlay when affected, else the base
-      val cents = s.read.parquet(s"$folded/centroids")
-      val qs = s.read.parquet(s"$idx/vectors").filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      val dist = qs.crossJoin(broadcast(withCentNorm(cents)))
-        .withColumn("d", cellDist(col("qv"), col("sv"), col("c"),
-          col("qn"), col("sn")))
-      val wp = Window.partitionBy(col("qid"))
-        .orderBy(col("d").asc, col("label").asc)
-      val probe = dist.withColumn("pr", row_number().over(wp))
-        .filter(col("pr") <= 2)
-        .select(col("qid"), col("label"), col("qv"), col("qn"))
-      val probed = probe.select("label").distinct().collect().map(_.get(0))
-      // affected set = the fold overlay's cell list (partition values,
-      // metadata-sized)
-      val affected = s.read.parquet(s"$folded/cells")
-        .select("label").distinct().collect().map(_.get(0)).toSet
-      val (hot, cold) = probed.partition(affected.contains)
-      val pool = s.read.parquet(s"$folded/cells")
-        .filter(col("label").isin(hot: _*))
-        .unionByName(s.read.parquet(s"$idx/vectors")
-          .filter(col("label").isin(cold: _*))
-          .withColumn("is_new", lit(false)))
-      annIncServe(pool, probe)
+      annServe(s, dir, annFoldedTable(s, dir))
     },
 
     // -------------------------------- hybrid filtered vector search
@@ -1304,10 +1226,11 @@ object EmbedOps {
         s"v2|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
         val v = quantized(s, dir)
           .withColumn("src", pmod(col("vec_id"), lit(3)))
-        centroidTable(v).write
+        AnnIndex.centroidTable(v).write
           .parquet(java.nio.file.Paths.get(p, "centroids").toString)
         // FILTER KEY FIRST: src prunes before label — the whole point
-        clusterForWrite(v, "src", "label").write.partitionBy("src", "label")
+        AnnIndex.clusterForWrite(v, "src", "label")
+          .write.partitionBy("src", "label")
           .parquet(java.nio.file.Paths.get(p, "vectors").toString)
       }
       val cents = s.read.parquet(s"$idx/centroids")
@@ -1316,8 +1239,8 @@ object EmbedOps {
         .select(col("vec_id").as("qid"), col("q").as("qv"),
           col("nn").as("qn"),
           pmod(col("vec_id") + 1, lit(3)).as("filt"))
-      val dist = qs.crossJoin(broadcast(withCentNorm(cents)))
-        .withColumn("d", cellDist(col("qv"), col("sv"), col("c"),
+      val dist = qs.crossJoin(broadcast(AnnIndex.withCentNorm(cents)))
+        .withColumn("d", AnnIndex.cellDist(col("qv"), col("sv"), col("c"),
           col("qn"), col("sn")))
       val wp = Window.partitionBy(col("qid"))
         .orderBy(col("d").asc, col("label").asc)
@@ -1341,7 +1264,8 @@ object EmbedOps {
             pool("src") === probe("filt") &&
             col("vec_id") =!= col("qid"))
         .withColumn("cos",
-          cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
+          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
+            col("qn"), col("nn")))
       val wr = Window.partitionBy(col("qid"))
         .orderBy(col("cos").desc, col("vec_id").asc)
       val ann = cand.withColumn("rnk", row_number().over(wr))
@@ -1356,7 +1280,8 @@ object EmbedOps {
       val ex = exPool.join(broadcast(qs),
           exPool("src") === qs("filt") && col("vec_id") =!= col("qid"))
         .withColumn("ecos",
-          cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
+          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
+            col("qn"), col("nn")))
         .withColumn("ernk", row_number().over(Window
           .partitionBy(col("qid"))
           .orderBy(col("ecos").desc, col("vec_id").asc)))
@@ -1433,135 +1358,55 @@ object EmbedOps {
         SELECT query_id, rnk::INT AS rnk, neighbor_id, cell,
                ROUND(cos, 6) AS cosine, TRUE AS fresh
         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")) { (s, dir) =>
-      import s.implicits._
-      // per-invocation scratch root; the previous invocation's copy is
-      // reclaimed (its lazy result frame is invalidated anyway)
       val root = graft.core.Fs.rotatingTempRoot("q214_vx")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_vx" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_vx.root" ->
-          root.resolve("cat").toString)
-      graft.core.Phases("ddl") {
-        sc.sql("CREATE NAMESPACE graft_cat_vx.default")
-        sc.sql("CREATE TABLE graft_cat_vx.default.vecs (" +
-          "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-          "source STRING, text STRING)")
-        sc.sql("ALTER TABLE graft_cat_vx.default.vecs ADD COLUMNS " +
-          "(vlabel INT, q ARRAY<BIGINT>)")
-        quantizedStaged(sc, dir).createOrReplaceTempView("q214_src")
-      }
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_vx.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          s"FROM q214_src WHERE $where")
-        ()
-      }
-      val tablePath = root.resolve("cat").resolve("default")
-        .resolve("vecs").toString
+      val t = new VecTable(s, dir, "graft_cat_vx", root)
       // commit 1: the nightly slice the base index is built from
       // (CREATE/ALTER consumed versions of their own — capture the
       // actual head so the nightly snapshot and the CDF stream's
       // starting offset track the table's real history)
-      ins("vec_id % 10 <> 0")
+      t.ins("vec_id % 10 <> 0")
       val baseV =
-        graft.sources.DocStoreCommitOps.nextVersion(tablePath) - 1
+        graft.sources.DocStoreCommitOps.nextVersion(t.path) - 1
       // commits 2-4: three arrival batches
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 0")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 1")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 2")
-      // ---- nightly build: base-version rows -> cell-partitioned
-      // base + integer centroid state (sums + counts per cell)
-      val v1 = cdcVecsOf(sc.sql(
-        s"SELECT * FROM graft_cat_vx.default.vecs VERSION AS OF $baseV"))
+      (0 to 2).foreach(k => t.ins(s"vec_id % 10 = 0 AND vec_id % 3 = $k"))
       val baseDir = root.resolve("base").toString
-      // associative centroid state, driver-held: cells x (dim + 1)
-      // integers — the metastore-sized piece of a production index
-      val state = scala.collection.mutable.HashMap[Int, (Array[Long], Long)]()
-      graft.core.Phases("build") {
-        // ONE snapshot scan feeds the layout write AND the centroid
-        // state off the cache, the two actions concurrent (guide
-        // §2.6; the old shape wrote, then re-read the written layer
-        // for its aggregates — identical integer sums either way)
-        val v1c = v1.persist()
-        try {
-          var agg: Array[(Int, Seq[Long], Long)] = null
-          graft.sources.AnnIndex.inParallel(
-            clusterForWrite(v1c, "label").write.partitionBy("label")
-              .parquet(baseDir),
-            { agg = cdcCellAgg(v1c) })
-          agg.foreach { case (l, sv, c) => state(l) = (sv.toArray, c) }
-        } finally { v1c.unpersist(); () }
-      }
+      val state = cdcBuild(t, baseV, baseDir)
       // ---- streaming maintenance: one micro-batch per commit
       val fragDir = root.resolve("frags").toString
-      val stream = sc.readStream.format("graft-docstore")
-        .option("path", tablePath)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", (baseV + 1).toString)
-        .load()
-      val q = stream.writeStream
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // two actions consume the micro-batch (fragment append +
-          // centroid fold): persist it so the CDF source's segment
-          // files are read once per commit, not twice (r16 review).
-          // persist, NOT localCheckpoint: the r22 A/B read the eager
-          // checkpoint as a per-batch regression (an extra serial
-          // materialization job before the parallel consumers; q224
-          // 3.89 -> 4.94 s) — the micro-batch lineage is shallow, so
-          // there is no planning debt for the checkpoint to pay off.
-          val rows = cdcVecsOf(batch
-            .filter(col("_change_type") === "insert")).persist()
-          try {
-            // fragment append (BATCH-sized, cell-partitioned,
-            // clustered — the rebalance exchange rides the write side
-            // only) and the centroid-fold aggregation both read the
-            // cached rows and are independent — concurrent (guide
-            // §2.6); the state mutation stays on this thread
-            var agg: Array[(Int, Seq[Long], Long)] = null
-            graft.sources.AnnIndex.inParallel(
-              clusterForWrite(rows, "label").write.mode("append")
-                .partitionBy("label").parquet(fragDir),
-              { agg = cdcCellAgg(rows) })
-            // centroid fold: batch aggregates only, integer-exact
-            agg.foreach { case (l, sv, c) =>
-              val (os, oc) = state.getOrElse(l, (new Array[Long](DIM), 0L))
-              var i = 0
-              while (i < DIM) { os(i) += sv(i); i += 1 }
-              state(l) = (os, oc + c)
-            }
-          } finally { rows.unpersist(); () }
-          () : Unit
-        }
-        .start()
-      graft.core.Phases("stream") {
-        try q.awaitTermination() finally q.stop()
+      drainChanges(t, baseV + 1, root) { batch =>
+        // two actions consume the micro-batch (fragment append +
+        // centroid fold): persist it so the CDF source's segment
+        // files are read once per commit, not twice (r16 review).
+        // persist, NOT localCheckpoint: the r22 A/B read the eager
+        // checkpoint as a per-batch regression (an extra serial
+        // materialization job before the parallel consumers; q224
+        // 3.89 -> 4.94 s) — the micro-batch lineage is shallow, so
+        // there is no planning debt for the checkpoint to pay off.
+        val rows = cdcVecsOf(batch
+          .filter(col("_change_type") === "insert")).persist()
+        try {
+          // fragment append and centroid-fold aggregation both read
+          // the cached rows and are independent — concurrent (guide
+          // §2.6); the state mutation stays on this thread
+          var agg: Array[(Int, Seq[Long], Long)] = null
+          AnnIndex.inParallel(
+            AnnIndex.clusterForWrite(rows, "label").write.mode("append")
+              .partitionBy("label").parquet(fragDir),
+            { agg = cdcCellAgg(rows) })
+          cdcApply(state, agg, 1)
+        } finally { rows.unpersist(); () }
       }
       // ---- serve from the MAINTAINED state (base + fragments)
-      val cents = state.toSeq
-        .map { case (l, (sv, c)) => (l, sv.toSeq, c) }
-        .toDF("label", "sv", "c")
       val qs = s.read.parquet(baseDir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("q").as("qv"),
           col("nn").as("qn"))
       val incr = graft.core.Phases("serve") {
-        annStateServe(qs, cents,
+        stateServe(qs, stateFrame(s, state),
           s.read.parquet(baseDir).unionByName(s.read.parquet(fragDir)))
       }
-      // ---- the freshness AUDIT: a from-scratch rebuild over the
-      // table's current snapshot must serve identically, off the
-      // maintenance path. The rebuild's CENTROIDS are re-derived from
-      // the snapshot too — probing the maintained state would audit
-      // it against itself (r17 review) — and the snapshot is
-      // persisted so the centroid fold, the probe collect, and the
-      // pool read share ONE audit scan instead of rescanning per use
-      graft.core.Phases("audit") {
-        val cur = cdcVecsOf(sc.read.format("graft-docstore")
-          .option("path", tablePath).load()).persist()
-        freshAudit(incr, annStateServe(qs, centroidTable(cur), cur))
-      }
+      // ---- the freshness AUDIT against a from-scratch rebuild over
+      // the table's current snapshot
+      cdcFreshAudit(t, qs, incr)
     },
 
     Q("q217_ann_lsm_fold_retire",
@@ -1589,125 +1434,37 @@ object EmbedOps {
         "manifest swap is metadata-sized, and retired fragments stop " +
         "taxing every probe — compaction, scheduled off-peak.",
       Some(annIncOracle)) { (s, dir) =>
-      val idx = ivfIncBase(s, dir)
-      val pristine = annLsmFrags(s, dir)
-      // the retire lifecycle MUTATES fragment state — operate on a
-      // per-invocation copy of the pristine Scratch fragments
-      // (milliseconds; the catalogCopy precedent)
-      val root = graft.core.Fs.rotatingTempRoot("q217_lsm")
-      val fragDirs = (0 to 2).map(k =>
-        root.resolve("frags").resolve(s"frag-$k"))
-      val manifest = new LsmManifest(root)
+      // the fold MUTATES index state — operate on a per-invocation copy
+      // of the pristine Scratch table (milliseconds; the catalogCopy
+      // precedent)
+      val path = graft.core.Fs.rotatingTempRoot("q217_lsm").resolve("vecs")
       graft.core.Phases("setup") {
         graft.core.Fs.copyRecursively(
-          java.nio.file.Paths.get(pristine), root.resolve("frags"))
-        // ---- the index MANIFEST: `<kind>,<relative path>` lines,
-        // published by ATOMIC RENAME under the docstore commit lock
-        // (the same arbitration the lakehouse commits use); versioned
-        // copies retained like MANIFEST.v<n>
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          manifest.publish(Seq(("base", idx)), 0)
-        }
-        // three accumulation commits (the steady-state upsert cadence)
-        fragDirs.zipWithIndex.foreach { case (f, k) =>
-          graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-            manifest.publish(manifest.read() :+ (("frag", f.toString)), k + 1)
-          }
-        }
+          java.nio.file.Paths.get(annIncTable(s, dir)), path)
       }
-      // ---- shared serve (the q207 shape): probe the given centroids
-      // ONCE (the r19 probePairs shape — the final top-k job used to
-      // re-execute the probe subtree behind its broadcast), scan only
-      // probed cells of the given layer pool
-      def serve(cents: DataFrame, poolOf: Seq[Any] => DataFrame)
-          : DataFrame = {
-        val qs = s.read.parquet(s"$idx/vectors").filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("q").as("qv"),
-            col("nn").as("qn"))
-        val (cells, probe) =
-          graft.sources.AnnIndex.probePairs(s, qs, cents, 2)
-        annIncServe(poolOf(cells.map(c => c: Any)), probe)
-      }
-      val fragVecs = manifest.read().collect { case ("frag", p) =>
-        s"$p/vectors" }
-      val dcents = manifest.read().collect { case ("frag", p) =>
-        s"$p/dcent" }
-      val cents = foldedCentroidsAll(s, idx, dcents)
-        .persist() // tiny; probed twice (before + after)
+      val idxRoot = AnnIndex.dirFor(path.toString, "q")
+      val pending = AnnIndex.load(idxRoot)
       val before = graft.core.Phases("serve_pre") {
-        serve(cents, cells =>
-          s.read.parquet(s"$idx/vectors")
-            .filter(col("label").isin(cells: _*))
-            .withColumn("is_new", lit(false))
-            .unionByName(fragVecs.map(p => s.read.parquet(p))
-              .reduce(_.unionByName(_))
-              .filter(col("label").isin(cells: _*))
-              .withColumn("is_new", lit(true))))
-          .collect()
+        annServe(s, dir, path.toString).collect()
       }
-      // ---- the FOLD: one affected-cells-only pass over base + all
-      // three fragments -> overlay + folded centroids
-      val fold = root.resolve("fold")
-      graft.core.Phases("fold") {
-        // the overlay write and the sealed-centroid write are
-        // independent (guide §2.6) — cents is persisted above
-        graft.sources.AnnIndex.inParallel(
-          clusterForWrite(annLsmFoldInput(s, idx, fragVecs), "label")
-            .write.partitionBy("label")
-            .parquet(fold.resolve("cells").toString),
-          cents.write.parquet(fold.resolve("centroids").toString))
-      }
-      // ---- the atomic RETIRE: swap the manifest under the commit
-      // lock (conflict-checked), then delete the retired fragments —
-      // deletion happens only AFTER the swap made them unreachable
-      graft.core.Phases("retire") {
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          val cur = manifest.read()
-          val curFrags = cur.collect { case ("frag", p) => p }
-          require(curFrags == fragDirs.map(_.toString),
-            s"concurrent fragment change since the fold was computed " +
-              s"(expected ${fragDirs.mkString(",")}, manifest has " +
-              s"${curFrags.mkString(",")}); refusing the swap")
-          manifest.publish(Seq(("base", idx), ("fold", fold.toString)), 4)
-          curFrags.foreach(graft.core.Fs.deleteRecursively)
-        }
-      }
-      require(fragDirs.forall(f => !java.nio.file.Files.exists(f)),
+      // ---- the FOLD + atomic RETIRE: one affected-cells-only pass,
+      // the conflict-checked manifest swap under the commit lock, and
+      // the retired fragments deleted only after the swap
+      val f = graft.core.Phases("fold") { AnnIndex.fold(path.toString, "q") }
+      require(f.foldedFragments == 3 && f.retiredLayers == 3,
+        s"expected 3 fragments folded and retired, got $f")
+      require(pending.frags.forall(fr =>
+        !java.nio.file.Files.exists(idxRoot.resolve(fr))),
         "retired fragments must be deleted after the swap")
-      val post = manifest.read()
-      require(!post.exists(_._1 == "frag") &&
-        post.exists(_._1 == "fold"),
+      val post = AnnIndex.load(idxRoot)
+      require(post.frags.isEmpty && post.folds.nonEmpty,
         s"post-fold manifest must list base + overlay only, got $post")
-      // ---- serve AFTER, resolving layers from the swapped manifest:
-      // probed affected cells read the overlay, untouched cells the base
-      val foldDir = post.collect { case ("fold", p) => p }.head
-      val foldCells = s"$foldDir/cells"
-      val (afterDf, after) = graft.core.Phases("serve_post") {
-        val affected = s.read.parquet(foldCells)
-          .select("label").distinct().collect().map(_.get(0)).toSet
-        // post-swap readers resolve EVERYTHING through the manifest:
-        // centroids come from the overlay's persisted copy, never from
-        // the (retired, deleted) fragment aggregates
-        val a = serve(s.read.parquet(s"$foldDir/centroids"), cells => {
-          val (hot, cold) = cells.partition(affected.contains)
-          s.read.parquet(foldCells)
-            .filter(col("label").isin(hot: _*))
-            .unionByName(s.read.parquet(s"$idx/vectors")
-              .filter(col("label").isin(cold: _*))
-              .withColumn("is_new", lit(false)))
-        })
-        // persist: the returned frame is executed AGAIN by the caller
-        // (Verify's write / the bench's noop) — without the cache the
-        // whole post-retire serve would recompute a third time
-        a.persist()
-        (a, a.collect())
-      }
-      cents.unpersist()
-      // the fold's correctness contract, asserted row for row
-      require(before.toSeq == after.toSeq,
-        s"serve-after-fold must equal serve-before-fold: " +
-          s"${before.toSeq.diff(after.toSeq)} vs " +
-          s"${after.toSeq.diff(before.toSeq)}")
+      // ---- serve AFTER, resolved through the swapped manifest;
+      // persist: the caller executes the returned frame again
+      val afterDf = annServe(s, dir, path.toString).persist()
+      val after = graft.core.Phases("serve_post") { afterDf.collect() }
+      requireSame(before, after,
+        "serve-after-fold must equal serve-before-fold")
       afterDf
     },
 
@@ -1821,17 +1578,18 @@ object EmbedOps {
         val v = quantized(s, dir).withColumn("src",
           when(col("label") <= 1, lit(0L))
             .otherwise(lit(1L) + pmod(col("vec_id"), lit(2))))
-        centroidTable(v).write
+        AnnIndex.centroidTable(v).write
           .parquet(java.nio.file.Paths.get(p, "centroids").toString)
         // the remediation: ONE per-src centroid table, src-partitioned
         // (a probe reads exactly its slice's cells-x-dim integers)
-        clusterForWrite((0L to 2L)
-            .map(k => centroidTable(v.filter(col("src") === k))
+        AnnIndex.clusterForWrite((0L to 2L)
+            .map(k => AnnIndex.centroidTable(v.filter(col("src") === k))
               .withColumn("src", lit(k)))
             .reduce(_.unionByName(_)), "src")
           .write.partitionBy("src")
           .parquet(java.nio.file.Paths.get(p, "scentroids").toString)
-        clusterForWrite(v, "src", "label").write.partitionBy("src", "label")
+        AnnIndex.clusterForWrite(v, "src", "label")
+          .write.partitionBy("src", "label")
           .parquet(java.nio.file.Paths.get(p, "vectors").toString)
       }
       val qs = s.read.parquet(s"$idx/vectors")
@@ -1843,7 +1601,7 @@ object EmbedOps {
       // building their broadcasts
       def probeOf(cents: DataFrame): (Seq[Any], DataFrame) = {
         val (cells, probe) =
-          graft.sources.AnnIndex.probePairs(s, qs, cents, 2)
+          AnnIndex.probePairs(s, qs, cents, 2)
         (cells.map(c => c: Any), probe)
       }
       val wr = Window.partitionBy(col("qid"))
@@ -1852,14 +1610,16 @@ object EmbedOps {
         .join(broadcast(probe),
           pool("label") === probe("label") && col("vec_id") =!= col("qid"))
         .withColumn("cos",
-          cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
+          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
+            col("qn"), col("nn")))
         .withColumn("rnk", row_number().over(wr))
         .filter(col("rnk") <= 3)
       // exact ground truth over the filtered slice (src-pruned scan)
       val slice = s.read.parquet(s"$idx/vectors").filter(col("src") === 0)
       val ex3 = slice.join(broadcast(qs), col("vec_id") =!= col("qid"))
         .withColumn("cos",
-          cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
+          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
+            col("qn"), col("nn")))
         .withColumn("ernk", row_number().over(wr))
         .filter(col("ernk") <= 3)
         .select(col("qid").as("eqid"), col("vec_id").as("enid"))
@@ -1971,122 +1731,42 @@ object EmbedOps {
         SELECT query_id, rnk::INT AS rnk, neighbor_id, cell,
                ROUND(cos, 6) AS cosine
         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")) { (s, dir) =>
-      val (idx, pristine) = annTombPaths(s, dir)
-      // per-invocation copy: compaction RETIRES the fragment
-      val root = graft.core.Fs.rotatingTempRoot("q221_tomb")
-      val tomb = root.resolve("tomb")
-      val manifest = new LsmManifest(root)
+      // per-invocation copy: compaction RETIRES the tombstone layer
+      val path = graft.core.Fs.rotatingTempRoot("q221_tomb").resolve("vecs")
       graft.core.Phases("setup") {
         graft.core.Fs.copyRecursively(
-          java.nio.file.Paths.get(pristine), root.resolve("tomb"))
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          manifest.publish(Seq(("base", idx), ("tomb", tomb.toString)), 0)
-        }
+          java.nio.file.Paths.get(annTombTable(s, dir)), path)
       }
-      val tombKeys = s.read.parquet(s"$tomb/keys")
-      // deleted-id audit list (tombstones are batch-sized by contract)
-      val deadIds = graft.core.Phases("setup") {
-        tombKeys.select("vec_id").collect()
-          .map(_.getLong(0)).toSet
-      }
-      // centroid state MINUS the fragment's aggregates (exact ints)
-      val cents = s.read.parquet(s"$idx/centroids")
-        .join(broadcast(s.read.parquet(s"$tomb/dcent")),
-          Seq("label"), "left")
-        .select(col("label"),
-          when(col("dv").isNull, col("sv"))
-            .otherwise(zip_with(col("sv"), col("dv"), (a, b) => a - b))
-            .as("sv"),
-          (col("c") - coalesce(col("dc"), lit(0L))).as("c"))
-        // a fully-tombstoned cell leaves c = 0 with a ZERO vector whose
-        // probe distance is exactly 0 — it would win a probe slot while
-        // holding no candidates, and the oracle (built over survivors)
-        // never sees the label; drop it from the probe AND from the
-        // persisted compacted centroids (r17 review)
-        .filter(col("c") > 0)
-        .persist()
-      // the shared state serve (annStateServeBy), ordered for the
-      // in-gate row-by-row compare
-      val serveQs = s.read.parquet(s"$idx/vectors")
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      def serve(cc: DataFrame, poolOf: Seq[Any] => DataFrame): DataFrame =
-        annStateServeBy(serveQs, cc, poolOf).orderBy("query_id", "rnk")
-      // ---- serve WITH tombstones: anti-join the broadcast keys
-      // inside probed cells — deleted vectors are unfindable before
-      // any byte is rewritten
-      val before = graft.core.Phases("serve_pre") {
-        serve(cents, cells =>
-          s.read.parquet(s"$idx/vectors")
-            .filter(col("label").isin(cells: _*))
-            .join(broadcast(tombKeys), Seq("vec_id", "label"), "left_anti"))
-          .collect()
-      }
+      val idxRoot = AnnIndex.dirFor(path.toString, "q")
+      val pending = AnnIndex.load(idxRoot)
+      val deadIds = graft.core.Phases("setup") { tombstonedIds(s, pending) }
+      // no arrivals: every row is base, so is_new is constant and the
+      // serve is exactly top-3
+      def serve(): DataFrame = annServe(s, dir, path.toString)
+        .select("query_id", "rnk", "neighbor_id", "cell", "cosine")
+      // ---- serve WITH the pending tombstone: subtracted centroids and
+      // the broadcast keys anti-joined inside probed cells — deleted
+      // vectors are unfindable before any byte is rewritten
+      val before = graft.core.Phases("serve_pre") { serve().collect() }
       require(before.forall(r => !deadIds(r.getLong(2))),
         "a tombstoned vector surfaced in the masked serve")
-      // ---- COMPACTION: rewrite ONLY the affected cells without the
-      // tombstoned rows, persist the subtracted centroids, swap the
-      // manifest atomically, delete the retired fragment
-      val affected = tombKeys.select("label").distinct()
-        .collect().map(_.get(0))
-      val compacted = root.resolve("compact")
-      graft.core.Phases("compact") {
-        // rewrite + sealed-centroid write are independent (guide
-        // §2.6) — cents is persisted above
-        graft.sources.AnnIndex.inParallel(
-          clusterForWrite(s.read.parquet(s"$idx/vectors")
-              .filter(col("label").isin(affected.toSeq: _*))
-              .join(broadcast(tombKeys), Seq("vec_id", "label"),
-                "left_anti"),
-              "label")
-            .write.partitionBy("label")
-            .parquet(compacted.resolve("cells").toString),
-          cents.write.parquet(compacted.resolve("centroids").toString))
+      // ---- COMPACTION: rewrite only the affected cells without the
+      // tombstoned rows, seal the subtracted centroids, swap the
+      // manifest atomically, delete the retired tombstone layer
+      val f = graft.core.Phases("compact") {
+        AnnIndex.fold(path.toString, "q")
       }
-      graft.core.Phases("retire") {
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          val cur = manifest.read()
-          require(cur.collect { case ("tomb", p) => p } ==
-            Seq(tomb.toString),
-            s"concurrent tombstone change since compaction was computed; " +
-              "refusing the swap")
-          manifest.publish(
-            Seq(("base", idx), ("compact", compacted.toString)), 1)
-          graft.core.Fs.deleteRecursively(tomb)
-        }
-      }
-      require(!java.nio.file.Files.exists(tomb),
+      require(f.appliedTombstones == 1 && pending.tombs.forall(tb =>
+        !java.nio.file.Files.exists(idxRoot.resolve(tb))),
         "the retired tombstone fragment must be deleted after the swap")
-      // audit: the compacted cells physically lack the deleted ids
       val leaked = graft.core.Phases("audit") {
-        s.read.parquet(compacted.resolve("cells").toString)
-          .filter(col("vec_id").isin(deadIds.toSeq: _*)).count()
+        foldedLeaks(s, idxRoot, deadIds)
       }
       require(leaked == 0, s"$leaked tombstoned rows survived compaction")
-      // ---- serve AFTER compaction, resolved through the manifest:
-      // affected cells read the compacted overlay (no mask needed),
-      // untouched cells the base
-      val post = manifest.read()
-      val compDir = post.collect { case ("compact", p) => p }.head
-      val affectedSet = affected.toSet
-      val (afterDf, after) = graft.core.Phases("serve_post") {
-        val a = serve(
-          s.read.parquet(s"$compDir/centroids"), cells => {
-            val (hot, cold) = cells.partition(affectedSet.contains)
-            s.read.parquet(s"$compDir/cells")
-              .filter(col("label").isin(hot: _*))
-              .unionByName(s.read.parquet(s"$idx/vectors")
-                .filter(col("label").isin(cold: _*)))
-          })
-        a.persist()
-        (a, a.collect())
-      }
-      cents.unpersist()
-      require(before.toSeq == after.toSeq,
-        "serve-after-compaction must equal serve-with-tombstones: " +
-          s"${before.toSeq.diff(after.toSeq)} vs " +
-          s"${after.toSeq.diff(before.toSeq)}")
+      val afterDf = serve().persist()
+      val after = graft.core.Phases("serve_post") { afterDf.collect() }
+      requireSame(before, after,
+        "serve-after-compaction must equal serve-with-tombstones")
       afterDf
     },
 
@@ -2149,124 +1829,37 @@ object EmbedOps {
         SELECT query_id, rnk::INT AS rnk, neighbor_id, cell,
                ROUND(cos, 6) AS cosine, TRUE AS fresh
         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")) { (s, dir) =>
-      import s.implicits._
       val root = graft.core.Fs.rotatingTempRoot("q222_forget")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_fg" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_fg.root" ->
-          root.resolve("cat").toString)
-      graft.core.Phases("ddl") {
-        sc.sql("CREATE NAMESPACE graft_cat_fg.default")
-        // merge-on-read DELETEs: deletion vectors make the change feed
-        // emit EXACTLY the deleted rows (the CDC-friendly cost model —
-        // Delta enables DVs by default for the same reason); a
-        // copy-on-write DELETE would surface as rewrite churn
-        // (delete-all + reinsert-survivors) in a snapshot-diff CDF
-        sc.sql("CREATE TABLE graft_cat_fg.default.vecs (" +
-          "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-          "source STRING, text STRING) TBLPROPERTIES " +
-          "('graft.rowlevel.mode' = 'merge-on-read')")
-        sc.sql("ALTER TABLE graft_cat_fg.default.vecs ADD COLUMNS " +
-          "(vlabel INT, q ARRAY<BIGINT>)")
-        quantizedStaged(sc, dir).createOrReplaceTempView("q222_src")
+      // merge-on-read DELETEs: deletion vectors make the change feed
+      // emit EXACTLY the deleted rows (the CDC-friendly cost model —
+      // Delta enables DVs by default for the same reason); a
+      // copy-on-write DELETE would surface as rewrite churn
+      // (delete-all + reinsert-survivors) in a snapshot-diff CDF
+      val t = new VecTable(s, dir, "graft_cat_fg", root, mor = true)
+      t.ins("true")
+      val b = graft.core.Phases("build") {
+        AnnIndex.build(t.path, "doc_id", "q", "vlabel")
       }
-      graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_fg.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          "FROM q222_src")
-        ()
-      }
-      val tablePath = root.resolve("cat").resolve("default")
-        .resolve("vecs").toString
-      val baseV =
-        graft.sources.DocStoreCommitOps.nextVersion(tablePath) - 1
       // commits 2-4: three takedown batches (together: doc_id % 7 = 3)
-      graft.core.Phases("dml") {
-        (0 to 2).foreach(k => sc.sql(
-          "DELETE FROM graft_cat_fg.default.vecs " +
-            s"WHERE doc_id % 7 = 3 AND doc_id % 3 = $k"))
+      (0 to 2).foreach(k => t.del(s"doc_id % 7 = 3 AND doc_id % 3 = $k"))
+      // ---- streaming maintenance: each DELETE commit's micro-batch
+      // (pre-image rows) goes to AnnIndex.syncBatch — one tombstone
+      // layer per commit, the centroid state SUBTRACTing its sums
+      drainChanges(t, b.builtAtVersion + 1, root) { batch =>
+        AnnIndex.syncBatch(t.path, "q", batch); ()
       }
-      // ---- nightly build from the base version: cell-partitioned
-      // layout + driver-held integer centroid state
-      val baseDir = root.resolve("base").toString
-      val state = scala.collection.mutable.HashMap[Int, (Array[Long], Long)]()
-      graft.core.Phases("build") {
-        // one snapshot scan feeds write + centroid state (guide §2.6)
-        val v1c = cdcVecsOf(sc.sql(
-          "SELECT * FROM graft_cat_fg.default.vecs " +
-            s"VERSION AS OF $baseV")).persist()
-        try {
-          var agg: Array[(Int, Seq[Long], Long)] = null
-          graft.sources.AnnIndex.inParallel(
-            clusterForWrite(v1c, "label")
-              .write.partitionBy("label").parquet(baseDir),
-            { agg = cdcCellAgg(v1c) })
-          agg.foreach { case (l, sv, c) => state(l) = (sv.toArray, c) }
-        } finally { v1c.unpersist(); () }
-      }
-      // ---- streaming maintenance: one micro-batch per DELETE commit;
-      // per batch: tombstone append (batch-sized, cell-partitioned)
-      // + integer centroid SUBTRACT (metadata-sized)
-      val tombDir = root.resolve("tombs").toString
-      val stream = sc.readStream.format("graft-docstore")
-        .option("path", tablePath)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", (baseV + 1).toString)
-        .load()
-      val q = stream.writeStream
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // persist, not localCheckpoint — see the q214 batch note
-          val rows = cdcVecsOf(batch
-            .filter(col("_change_type") === "delete")).persist()
-          try {
-            // tombstone append + centroid-subtract aggregation both
-            // read the cached rows — concurrent (guide §2.6)
-            var agg: Array[(Int, Seq[Long], Long)] = null
-            graft.sources.AnnIndex.inParallel(
-              clusterForWrite(rows.select("vec_id", "label"), "label")
-                .write.mode("append")
-                .partitionBy("label").parquet(tombDir),
-              { agg = cdcCellAgg(rows) })
-            agg.foreach { case (l, sv, c) =>
-              val (os, oc) = state.getOrElse(l, (new Array[Long](DIM), 0L))
-              var i = 0
-              while (i < DIM) { os(i) -= sv(i); i += 1 }
-              state(l) = (os, oc - c)
-            }
-          } finally { rows.unpersist(); () }
-          () : Unit
-        }
-        .start()
-      graft.core.Phases("stream") {
-        try q.awaitTermination() finally q.stop()
-      }
-      // ---- serve from the maintained state: subtracted centroids,
-      // base pool MASKED by the broadcast tombstone keys
-      val cents = state.toSeq
-        .map { case (l, (sv, c)) => (l, sv.toSeq, c) }
-        .toDF("label", "sv", "c")
-      val tombKeys = s.read.parquet(tombDir)
-      val qs = s.read.parquet(baseDir).filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
+      val L = AnnIndex.load(AnnIndex.dirFor(t.path, "q"))
+      require(L.tombs.size == 3 && L.frags.isEmpty,
+        s"expected one tombstone layer per DELETE commit, got $L")
+      // ---- serve from the maintained index (base minus the masked
+      // tombstone keys, subtracted centroids)
       val incr = graft.core.Phases("serve") {
-        annStateServe(qs, cents, s.read.parquet(baseDir)
-          .join(broadcast(tombKeys), Seq("vec_id", "label"), "left_anti"))
+        annServe(s, dir, t.path, "vec_id < 5")
+          .select("query_id", "rnk", "neighbor_id", "cell", "cosine")
       }
-      // ---- freshness audit: a from-scratch rebuild over the CURRENT
-      // snapshot must serve identically, off the maintenance path;
-      // rebuild centroids re-derive from the snapshot — probing the
-      // maintained state would audit the SUBTRACT path against
-      // itself (r17 review) — and the snapshot persists so the
-      // centroid fold, probe collect, and pool read share one scan
-      graft.core.Phases("audit") {
-        val cur = cdcVecsOf(sc.read.format("graft-docstore")
-          .option("path", tablePath).load()).persist()
-        freshAudit(incr, annStateServe(qs, centroidTable(cur), cur))
-      }
+      // ---- freshness audit against a from-scratch rebuild over the
+      // table's CURRENT snapshot, off the maintenance path
+      cdcFreshAudit(t, annQueries(s, dir, "vec_id < 5"), incr)
     },
 
     Q("q223_ann_procedures",
@@ -2293,28 +1886,11 @@ object EmbedOps {
         "per pipeline and `CALL system.ann_*` next to OPTIMIZE/" +
         "VACUUM/ANALYZE in the nightly maintenance job.",
       Some(annIncOracle)) { (s, dir) =>
-      val root = graft.core.Fs.rotatingTempRoot("q223_annproc")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_ap" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_ap.root" ->
-          root.resolve("cat").toString)
-      graft.core.Phases("setup") {
-        sc.sql("CREATE NAMESPACE graft_cat_ap.default")
-        sc.sql("CREATE TABLE graft_cat_ap.default.vecs (" +
-          "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-          "source STRING, text STRING)")
-        sc.sql("ALTER TABLE graft_cat_ap.default.vecs ADD COLUMNS " +
-          "(vlabel INT, q ARRAY<BIGINT>)")
-        quantizedStaged(sc, dir).createOrReplaceTempView("q223_src")
-      }
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_ap.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          s"FROM q223_src WHERE $where")
-      }
+      val t = new VecTable(s, dir, "graft_cat_ap",
+        graft.core.Fs.rotatingTempRoot("q223_annproc"))
+      val sc = t.sc
       // commit 1: the nightly slice; then the build — THROUGH SQL
-      ins("vec_id % 10 <> 0")
+      t.ins("vec_id % 10 <> 0")
       val b = graft.core.Phases("build") {
         sc.sql("CALL graft_cat_ap.system.ann_build(" +
           "'default.vecs', 'doc_id', 'q', 'vlabel')").head()
@@ -2322,18 +1898,17 @@ object EmbedOps {
       require(b.getLong(3) > 0, s"ann_build indexed no vectors: $b")
       // commits 2-4: three arrival batches; ONE sync call folds all
       // three pending versions — one fragment per commit
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 0")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 1")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 2")
+      t.ins("vec_id % 10 = 0 AND vec_id % 3 = 0")
+      t.ins("vec_id % 10 = 0 AND vec_id % 3 = 1")
+      t.ins("vec_id % 10 = 0 AND vec_id % 3 = 2")
       val sy = graft.core.Phases("sync") {
         sc.sql("CALL graft_cat_ap.system.ann_sync(" +
           "'default.vecs', 'q')").head()
       }
       require(sy.getLong(2) == 3 && sy.getLong(3) == 0,
         s"expected 3 fragments / 0 tombstones from ann_sync, got $sy")
-      val tablePath = root.resolve("cat").resolve("default")
-        .resolve("vecs").toString
-      val idxRoot = graft.sources.AnnIndex.dirFor(tablePath, "q")
+      val tablePath = t.path
+      val idxRoot = AnnIndex.dirFor(tablePath, "q")
       val qs = s.read.parquet(
           idxRoot.resolve("base").resolve("vectors").toString)
         .filter(col("vec_id") < 5)
@@ -2426,153 +2001,80 @@ object EmbedOps {
         SELECT query_id, rnk::INT AS rnk, neighbor_id, cell,
                ROUND(cos, 6) AS cosine, TRUE AS fresh
         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")) { (s, dir) =>
-      import s.implicits._
       val root = graft.core.Fs.rotatingTempRoot("q224_mixed")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_mx" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_mx.root" ->
-          root.resolve("cat").toString)
-      graft.core.Phases("ddl") {
-        sc.sql("CREATE NAMESPACE graft_cat_mx.default")
-        // merge-on-read: DELETE commits emit exactly the deleted rows
-        // with their pre-image values on the change feed (q222's cost
-        // model) — what keeps the tombstone cell-locatable lookup-free
-        sc.sql("CREATE TABLE graft_cat_mx.default.vecs (" +
-          "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-          "source STRING, text STRING) TBLPROPERTIES " +
-          "('graft.rowlevel.mode' = 'merge-on-read')")
-        sc.sql("ALTER TABLE graft_cat_mx.default.vecs ADD COLUMNS " +
-          "(vlabel INT, q ARRAY<BIGINT>)")
-        quantizedStaged(sc, dir).createOrReplaceTempView("q224_src")
-      }
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_mx.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          s"FROM q224_src WHERE $where")
-        ()
-      }
-      def del(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql(s"DELETE FROM graft_cat_mx.default.vecs WHERE $where")
-        ()
-      }
-      val tablePath = root.resolve("cat").resolve("default")
-        .resolve("vecs").toString
+      // merge-on-read: DELETE commits emit exactly the deleted rows
+      // with their pre-image values on the change feed (q222's cost
+      // model) — what keeps the tombstone cell-locatable lookup-free
+      val t = new VecTable(s, dir, "graft_cat_mx", root, mor = true)
       // commit 1: the nightly slice the base index is built from
-      ins("vec_id % 10 <> 0")
+      t.ins("vec_id % 10 <> 0")
       val baseV =
-        graft.sources.DocStoreCommitOps.nextVersion(tablePath) - 1
+        graft.sources.DocStoreCommitOps.nextVersion(t.path) - 1
       // commits 2-6: INSERT and DELETE interleave; each DELETE also
       // hits rows the PREVIOUS insert batch brought in (cross-type)
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 0")
-      del("doc_id % 7 = 3 AND doc_id % 3 = 0")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 1")
-      del("doc_id % 7 = 3 AND doc_id % 3 = 1")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 2")
-      // ---- nightly build from the base version: cell-partitioned
-      // layout + driver-held integer centroid state
+      t.ins("vec_id % 10 = 0 AND vec_id % 3 = 0")
+      t.del("doc_id % 7 = 3 AND doc_id % 3 = 0")
+      t.ins("vec_id % 10 = 0 AND vec_id % 3 = 1")
+      t.del("doc_id % 7 = 3 AND doc_id % 3 = 1")
+      t.ins("vec_id % 10 = 0 AND vec_id % 3 = 2")
       val baseDir = root.resolve("base").toString
-      val state = scala.collection.mutable.HashMap[Int, (Array[Long], Long)]()
-      graft.core.Phases("build") {
-        // one snapshot scan feeds write + centroid state (guide §2.6)
-        val v1c = cdcVecsOf(sc.sql(
-          "SELECT * FROM graft_cat_mx.default.vecs " +
-            s"VERSION AS OF $baseV")).persist()
-        try {
-          var agg: Array[(Int, Seq[Long], Long)] = null
-          graft.sources.AnnIndex.inParallel(
-            clusterForWrite(v1c, "label")
-              .write.partitionBy("label").parquet(baseDir),
-            { agg = cdcCellAgg(v1c) })
-          agg.foreach { case (l, sv, c) => state(l) = (sv.toArray, c) }
-        } finally { v1c.unpersist(); () }
-      }
+      val state = cdcBuild(t, baseV, baseDir)
       // ---- ONE maintenance stream: each micro-batch (one per commit)
       // routes its rows by change type against the SHARED state
       val fragDir = root.resolve("frags").toString
       val tombDir = root.resolve("tombs").toString
-      val stream = sc.readStream.format("graft-docstore")
-        .option("path", tablePath)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", (baseV + 1).toString)
-        .load()
-      val q = stream.writeStream
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // persist ONCE: both routes read the commit's CDF segments
-          // from the cache, not twice from disk
-          // persist, not localCheckpoint — see the q214 batch note
-          val chg = batch.persist()
-          try {
-            val insRows = cdcVecsOf(chg
-              .filter(col("_change_type") === "insert"))
-            val delRows = cdcVecsOf(chg
-              .filter(col("_change_type") === "delete"))
-            // both routes' aggregations read the cached commit — run
-            // them concurrently, then the (independent-dir) layer
-            // writes the counts justify, then the state mutations on
-            // this thread. ADD-then-SUBTRACT stays exact in any
-            // order (integer group), and the apply order is kept
-            // ins-then-del exactly as the serial loop's.
-            var insAgg: Array[(Int, Seq[Long], Long)] = null
-            var delAgg: Array[(Int, Seq[Long], Long)] = null
-            graft.sources.AnnIndex.inParallel(
-              { insAgg = cdcCellAgg(insRows) },
-              { delAgg = cdcCellAgg(delRows) })
-            val writes = Seq(
-              if (insAgg.nonEmpty) Some(() =>
-                clusterForWrite(insRows, "label").write.mode("append")
-                  .partitionBy("label")
-                  .parquet(fragDir) : Unit) else None,
-              if (delAgg.nonEmpty) Some(() =>
-                clusterForWrite(delRows.select("vec_id", "label"), "label")
-                  .write.mode("append")
-                  .partitionBy("label").parquet(tombDir) : Unit) else None
-            ).flatten
-            graft.sources.AnnIndex.inParallelAll(writes)
-            insAgg.foreach { case (l, sv, c) =>
-              val (os, oc) = state.getOrElse(l, (new Array[Long](DIM), 0L))
-              var i = 0
-              while (i < DIM) { os(i) += sv(i); i += 1 }
-              state(l) = (os, oc + c)
-            }
-            delAgg.foreach { case (l, sv, c) =>
-              val (os, oc) = state.getOrElse(l, (new Array[Long](DIM), 0L))
-              var i = 0
-              while (i < DIM) { os(i) -= sv(i); i += 1 }
-              state(l) = (os, oc - c)
-            }
-          } finally { chg.unpersist(); () }
-          () : Unit
-        }
-        .start()
-      graft.core.Phases("stream") {
-        try q.awaitTermination() finally q.stop()
+      drainChanges(t, baseV + 1, root) { batch =>
+        // persist ONCE: both routes read the commit's CDF segments
+        // from the cache, not twice from disk (persist, not
+        // localCheckpoint — see the q214 batch note)
+        val chg = batch.persist()
+        try {
+          val insRows = cdcVecsOf(chg
+            .filter(col("_change_type") === "insert"))
+          val delRows = cdcVecsOf(chg
+            .filter(col("_change_type") === "delete"))
+          // both routes' aggregations read the cached commit — run
+          // them concurrently, then the (independent-dir) layer writes
+          // the counts justify, then the state mutations on this
+          // thread. ADD-then-SUBTRACT stays exact in any order
+          // (integer group); the apply order is kept ins-then-del.
+          var insAgg: Array[(Int, Seq[Long], Long)] = null
+          var delAgg: Array[(Int, Seq[Long], Long)] = null
+          AnnIndex.inParallel(
+            { insAgg = cdcCellAgg(insRows) },
+            { delAgg = cdcCellAgg(delRows) })
+          val writes = Seq(
+            if (insAgg.nonEmpty) Some(() =>
+              AnnIndex.clusterForWrite(insRows, "label").write
+                .mode("append").partitionBy("label")
+                .parquet(fragDir) : Unit) else None,
+            if (delAgg.nonEmpty) Some(() =>
+              AnnIndex.clusterForWrite(delRows.select("vec_id", "label"),
+                  "label")
+                .write.mode("append")
+                .partitionBy("label").parquet(tombDir) : Unit) else None
+          ).flatten
+          AnnIndex.inParallelAll(writes)
+          cdcApply(state, insAgg, 1)
+          cdcApply(state, delAgg, -1)
+        } finally { chg.unpersist(); () }
       }
       // ---- serve from the maintained state: probed cells of base +
       // fragments, masked by the broadcast tombstone keys (the mask
       // covers FRAGMENT rows too — the cross-type case)
-      val cents = state.toSeq
-        .map { case (l, (sv, c)) => (l, sv.toSeq, c) }
-        .toDF("label", "sv", "c")
       val tombKeys = s.read.parquet(tombDir)
       val qs = s.read.parquet(baseDir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("q").as("qv"),
           col("nn").as("qn"))
       val incr = graft.core.Phases("serve") {
-        annStateServe(qs, cents,
+        stateServe(qs, stateFrame(s, state),
           s.read.parquet(baseDir).unionByName(s.read.parquet(fragDir))
             .join(broadcast(tombKeys), Seq("vec_id", "label"), "left_anti"))
       }
       // ---- freshness audit vs a from-scratch rebuild of the CURRENT
       // snapshot (centroids re-derived from the snapshot, never the
       // maintained state)
-      graft.core.Phases("audit") {
-        val cur = cdcVecsOf(sc.read.format("graft-docstore")
-          .option("path", tablePath).load()).persist()
-        freshAudit(incr, annStateServe(qs, centroidTable(cur), cur))
-      }
+      cdcFreshAudit(t, qs, incr)
     },
 
     Q("q225_filtered_ann_lsm",
@@ -2580,8 +2082,9 @@ object EmbedOps {
         "q218's per-src centroid tables were built once, statically; " +
         "at 100 TB the filtered index needs the same fragment/" +
         "tombstone lifecycle as the global one, scoped to its src " +
-        "partition): the src-partitioned layout (src=<k>/label=" +
-        "<cell>/, per-src pinned quantizers) takes an UPSERT commit " +
+        "partition): the filtered family (one self-contained " +
+        "sub-index per src under src=<k>/, per-src pinned quantizers; " +
+        "AnnIndex.build with a filter column) syncs an UPSERT commit " +
         "(held-out arrivals assigned against src 0's pinned " +
         "centroids -> a cell-partitioned fragment) and a DELETE " +
         "commit (tombstone keys + per-cell integer aggregates " +
@@ -2600,194 +2103,67 @@ object EmbedOps {
         "fragments + affected cells; the blast radius of an upsert " +
         "or takedown is its own partition, by construction.",
       Some(filteredLsmOracle)) { (s, dir) =>
-      val idx = filteredLsmIdx(s, dir)
-      val root = graft.core.Fs.rotatingTempRoot("q225_flsm")
-      val manifest = new LsmManifest(root)
-      graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-        manifest.publish(Seq(("base", idx)), 0)
+      // per-invocation copy of the pristine family table: base built
+      // (one self-contained sub-index per src), src 0's upsert and
+      // delete commits pending on the change feed
+      val path = graft.core.Fs.rotatingTempRoot("q225_flsm")
+        .resolve("vecs").toString
+      graft.core.Phases("setup") {
+        graft.core.Fs.copyRecursively(
+          java.nio.file.Paths.get(annFamilyTable(s, dir)),
+          java.nio.file.Paths.get(path))
       }
-      val pinned0 = s.read.parquet(s"$idx/scentroids")
-        .filter(col("src") === 0).drop("src")
-      // ---- upsert commit into src 0: held-out arrivals assigned
-      // against the PINNED src-0 quantizer (the per-src twin of q207)
-      val frag = root.resolve("frag")
-      graft.core.Phases("upsert") {
-        // ONE assignment pass feeds both layer writes off the cache
-        // (the read-back shape re-scanned the written fragment for
-        // its aggregates), and the two writes are independent —
-        // concurrent (guide §2.6). dcent values are identical either
-        // way: integer sums over the same rows.
-        val assigned = graft.sources.AnnIndex.assign(
-          s.read.parquet(s"$idx/arrivals"), pinned0).persist()
-        try {
-          graft.sources.AnnIndex.inParallel(
-            clusterForWrite(assigned, "label")
-              .write.partitionBy("label")
-              .parquet(frag.resolve("vectors").toString),
-            fragmentAggregates(assigned)
-              .write.parquet(frag.resolve("dcent").toString))
-        } finally { assigned.unpersist(); () }
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          manifest.publish(manifest.read() :+ (("frag", frag.toString)), 1)
-        }
-      }
-      val fragBack = s.read.parquet(frag.resolve("vectors").toString)
-      // ---- delete commit in src 0: tombstone keys + aggregates
-      // (requests carry their rows — the q221/q222 CDF posture)
-      val dead = s.read.parquet(s"$idx/vectors")
-        .filter(col("src") === 0 && col("vec_id") % 7 === 3).drop("src")
-      val tomb = root.resolve("tomb")
-      graft.core.Phases("delete") {
-        // keys + aggregates derive from the same request rows and
-        // write to independent dirs — concurrent (guide §2.6)
-        graft.sources.AnnIndex.inParallel(
-          clusterForWrite(dead.select("vec_id", "label"), "label")
-            .write.partitionBy("label")
-            .parquet(tomb.resolve("keys").toString),
-          fragmentAggregates(dead).write
-            .parquet(tomb.resolve("dcent").toString))
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          manifest.publish(manifest.read() :+ (("tomb", tomb.toString)), 2)
-        }
-      }
-      val tombKeys = s.read.parquet(tomb.resolve("keys").toString)
+      // ---- ONE sync: src 0's arrivals assigned against ITS pinned
+      // quantizer -> a fragment, its takedowns -> a tombstone; src 1
+      // and src 2 only advance their cursors
+      val sy = graft.core.Phases("sync") { AnnIndex.sync(path, "q") }
+      require(sy.fragments == 1 && sy.tombstones == 1,
+        s"expected 1 fragment + 1 tombstone (both in src 0), got $sy")
+      val fam = AnnIndex.dirFor(path, "q")
+      val sub0 = fam.resolve("src=0")
+      val pending = AnnIndex.load(sub0)
       val deadIds = graft.core.Phases("delete") {
-        tombKeys.select("vec_id").collect()
-          .map(_.getLong(0)).toSet
+        tombstonedIds(s, pending)
       }
-      // maintained src-0 centroid state: pinned + frag adds - tomb subs
-      def applyDelta(acc: DataFrame, dcent: DataFrame, sign: Int)
-          : DataFrame =
-        acc.join(broadcast(dcent), Seq("label"), "left")
-          .select(col("label"),
-            when(col("dv").isNull, col("sv"))
-              .otherwise(zip_with(col("sv"), col("dv"),
-                (a, b) => a + lit(sign) * b)).as("sv"),
-            (col("c") + lit(sign.toLong) * coalesce(col("dc"), lit(0L)))
-              .as("c"))
-      val maintained = applyDelta(
-        applyDelta(pinned0,
-          s.read.parquet(frag.resolve("dcent").toString), 1),
-        s.read.parquet(tomb.resolve("dcent").toString), -1)
-        .persist()
-      val qs = s.read.parquet(s"$idx/vectors").filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("q").as("qv"),
-          col("nn").as("qn"))
-      def serveSlice(cents: DataFrame, poolOf: Seq[Any] => DataFrame)
-          : DataFrame = {
-        // probe ONCE (r19 probePairs shape) — the top-k job used to
-        // re-execute the probe subtree building its broadcast
-        val (cells, probe) =
-          graft.sources.AnnIndex.probePairs(s, qs, cents, 2)
-        graft.sources.AnnIndex.topKWithBestNew(
-          poolOf(cells.map(c => c: Any)), probe, 3)
-      }
-      // ---- serve WITH pending layers: base src-0 cells + fragment,
-      // masked by the broadcast tombstone keys
+      // ---- the OTHER slice: src 1 serves while src 0 carries pending
+      // layers, and every index file it reads lives under its own
+      // immutable base — zero lifecycle files
+      val s1serve = annServe(s, dir, path, filter = Some(1L))
+      // inputFiles BEFORE persist: caching swaps the optimized plan's
+      // scans for an InMemoryRelation and the file set goes empty
+      val s1base = fam.resolve("src=1")
+        .resolve(AnnIndex.load(fam.resolve("src=1")).base).toString
+      val s1files = s1serve.inputFiles
+        .map(f => java.net.URI.create(f).getPath)
+        .filter(_.startsWith(fam.toString))
+      s1serve.persist()
+      require(s1files.nonEmpty && s1files.forall(_.startsWith(s1base)),
+        s"src-1 serve must read zero lifecycle files, got " +
+          s"${s1files.filterNot(_.startsWith(s1base)).toSeq}")
+      // ---- serve WITH src 0's pending layers
       val before = graft.core.Phases("serve_pre") {
-        serveSlice(maintained, cells =>
-          s.read.parquet(s"$idx/vectors").filter(col("src") === 0)
-            .drop("src").filter(col("label").isin(cells: _*))
-            .withColumn("is_new", lit(false))
-            .unionByName(fragBack.filter(col("label").isin(cells: _*))
-              .withColumn("is_new", lit(true)))
-            .join(broadcast(tombKeys), Seq("vec_id", "label"), "left_anti"))
-          .collect()
+        annServe(s, dir, path, filter = Some(0L)).collect()
       }
       require(before.forall(r => !deadIds(r.getLong(2))),
         "a tombstoned vector surfaced in the masked src-0 serve")
       require(before.exists(_.getBoolean(4)),
         "an upserted vector must be searchable in the src-0 serve")
-      // ---- FOLD, pruned to src 0's affected cells only
-      val affected = fragBack.select("label").distinct()
-        .unionByName(tombKeys.select("label").distinct())
-        .distinct().collect().map(_.get(0)).toSeq
-      val fold = root.resolve("fold")
-      graft.core.Phases("fold") {
-        // overlay + sealed-centroid writes are independent (guide
-        // §2.6) — maintained is persisted above
-        graft.sources.AnnIndex.inParallel(
-          clusterForWrite(s.read.parquet(s"$idx/vectors")
-              .filter(col("src") === 0).drop("src")
-              .filter(col("label").isin(affected: _*))
-              .withColumn("is_new", lit(false))
-              .join(broadcast(tombKeys), Seq("vec_id", "label"),
-                "left_anti")
-              .unionByName(fragBack.withColumn("is_new", lit(true))),
-              "label")
-            .write.partitionBy("label")
-            .parquet(fold.resolve("cells").toString),
-          maintained.filter(col("c") > 0).write
-            .parquet(fold.resolve("centroids").toString))
-      }
-      // ---- atomic retire (the q217 swap, conflict-checked)
-      graft.core.Phases("retire") {
-        graft.sources.DocStoreCommitOps.withCommitLock(root.toString) {
-          val cur = manifest.read()
-          require(cur.collect { case ("frag", p) => p } ==
-            Seq(frag.toString) &&
-            cur.collect { case ("tomb", p) => p } == Seq(tomb.toString),
-            s"concurrent layer change since the fold was computed " +
-              s"(manifest has $cur); refusing the swap")
-          manifest.publish(
-            Seq(("base", idx), ("fold", fold.toString)), 3)
-          graft.core.Fs.deleteRecursively(frag)
-          graft.core.Fs.deleteRecursively(tomb)
-        }
-      }
-      require(!java.nio.file.Files.exists(frag) &&
-        !java.nio.file.Files.exists(tomb),
+      // ---- FOLD: only src 0 holds pending layers, so only its cells
+      // are rewritten and only its manifest swaps
+      val f = graft.core.Phases("fold") { AnnIndex.fold(path, "q") }
+      require(f.foldedFragments == 1 && f.appliedTombstones == 1,
+        s"expected the fold to take 1 fragment + 1 tombstone, got $f")
+      require((pending.frags ++ pending.tombs).forall(l =>
+        !java.nio.file.Files.exists(sub0.resolve(l))),
         "retired layers must be deleted after the swap")
       val leaked = graft.core.Phases("audit") {
-        s.read.parquet(fold.resolve("cells").toString)
-          .filter(col("vec_id").isin(deadIds.toSeq: _*)).count()
+        foldedLeaks(s, sub0, deadIds)
       }
       require(leaked == 0, s"$leaked tombstoned rows survived the fold")
-      // ---- serve AFTER, resolved through the swapped manifest
-      val post = manifest.read()
-      val foldDir = post.collect { case ("fold", p) => p }.head
-      val affectedSet = affected.toSet
-      val (s0after, after) = graft.core.Phases("serve_post") {
-        val a = serveSlice(
-          s.read.parquet(s"$foldDir/centroids"), cells => {
-            val (hot, cold) = cells.partition(affectedSet.contains)
-            s.read.parquet(s"$foldDir/cells")
-              .filter(col("label").isin(hot: _*))
-              .unionByName(s.read.parquet(s"$idx/vectors")
-                .filter(col("src") === 0).drop("src")
-                .filter(col("label").isin(cold: _*))
-                .withColumn("is_new", lit(false)))
-          })
-        a.persist()
-        (a, a.collect())
-      }
-      maintained.unpersist()
-      require(before.toSeq == after.toSeq,
-        s"src-0 serve-after-fold must equal serve-before-fold: " +
-          s"${before.toSeq.diff(after.toSeq)} vs " +
-          s"${after.toSeq.diff(before.toSeq)}")
-      // ---- the OTHER slice: src 1 serves through the same manifest
-      // epoch and provably reads ZERO lifecycle files — its whole
-      // input set lives under the immutable base layout
-      val s1serve = graft.core.Phases("serve_s1") {
-        serveSlice(
-          s.read.parquet(s"$idx/scentroids")
-            .filter(col("src") === 1).drop("src"),
-          cells => s.read.parquet(s"$idx/vectors")
-            .filter(col("src") === 1).drop("src")
-            .filter(col("label").isin(cells: _*))
-            .withColumn("is_new", lit(false)))
-      }
-      // inputFiles BEFORE persist: caching swaps the optimized plan's
-      // scans for an InMemoryRelation and the file set goes empty
-      val s1files = s1serve.inputFiles
-        .map(f => java.net.URI.create(f).getPath)
-      s1serve.persist()
-      require(s1files.nonEmpty &&
-        s1files.forall(_.startsWith(idx)) &&
-        !s1files.exists(_.startsWith(root.toString)),
-        s"src-1 serve must read zero lifecycle files, got " +
-          s"${s1files.filterNot(_.startsWith(idx)).toSeq}")
+      val s0after = annServe(s, dir, path, filter = Some(0L)).persist()
+      val after = graft.core.Phases("serve_post") { s0after.collect() }
+      requireSame(before, after,
+        "src-0 serve-after-fold must equal serve-before-fold")
       val out = s0after.withColumn("flt_src", lit(0))
         .unionByName(s1serve.withColumn("flt_src", lit(1)))
         .select(col("flt_src"), col("query_id"), col("rnk"),
@@ -2822,45 +2198,23 @@ object EmbedOps {
         "system.ann_build(..., filter_col)` next to OPTIMIZE in the " +
         "nightly job is the whole filtered-ANN deployment story.",
       Some(filteredLsmOracle)) { (s, dir) =>
-      val root = graft.core.Fs.rotatingTempRoot("q226_family")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_fa" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_fa.root" ->
-          root.resolve("cat").toString)
-      graft.core.Phases("setup") {
-        sc.sql("CREATE NAMESPACE graft_cat_fa.default")
-        sc.sql("CREATE TABLE graft_cat_fa.default.vecs (" +
-          "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-          "source STRING, text STRING) TBLPROPERTIES " +
-          "('graft.rowlevel.mode' = 'merge-on-read')")
-        sc.sql("ALTER TABLE graft_cat_fa.default.vecs ADD COLUMNS " +
-          "(vlabel INT, src INT, q ARRAY<BIGINT>)")
-        quantizedStaged(sc, dir).withColumn("src",
-            when(col("label") <= 1, lit(0L))
-              .otherwise(lit(1L) + pmod(col("vec_id"), lit(2))))
-          .createOrReplaceTempView("q226_src")
-      }
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_fa.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), " +
-          s"CAST(src AS INT), q FROM q226_src WHERE $where")
-      }
+      val t = new VecTable(s, dir, "graft_cat_fa",
+        graft.core.Fs.rotatingTempRoot("q226_family"), mor = true, src = true)
+      val sc = t.sc
       // commit 1: the base slice; the family build — THROUGH SQL
-      ins("vec_id % 10 <> 0")
+      t.ins("vec_id % 10 <> 0")
       val b = graft.core.Phases("build") {
         sc.sql("CALL graft_cat_fa.system.ann_build(" +
           "'default.vecs', 'doc_id', 'q', 'vlabel', 'src')").head()
       }
       require(b.getLong(3) > 0, s"family build indexed no vectors: $b")
-      val tablePath = root.resolve("cat").resolve("default")
-        .resolve("vecs").toString
-      val idxRoot = graft.sources.AnnIndex.dirFor(tablePath, "q")
-      require(graft.sources.AnnIndex.isFamily(idxRoot),
+      val tablePath = t.path
+      val idxRoot = AnnIndex.dirFor(tablePath, "q")
+      require(AnnIndex.isFamily(idxRoot),
         "ann_build with filter_col must produce a filtered family")
       // commits 2-3: an upsert and a takedown, both in src 0 only
       // (the delete targets BASE rows — q225's dead slice)
-      ins("vec_id % 10 = 0 AND src = 0")
+      t.ins("vec_id % 10 = 0 AND src = 0")
       graft.core.Phases("dml") {
         sc.sql("DELETE FROM graft_cat_fa.default.vecs " +
           "WHERE doc_id % 7 = 3 AND src = 0 AND doc_id % 10 <> 0")
@@ -3011,9 +2365,9 @@ object EmbedOps {
       }
       // retention through the procedure surface: build v0 + two sync
       // commits (v1, v2) + the fold's v3 — the fold keeps ONLY v3
-      val idxRoot = graft.sources.AnnIndex.dirFor(root.resolve("cat")
+      val idxRoot = AnnIndex.dirFor(root.resolve("cat")
         .resolve("default").resolve("vecs").toString, "q")
-      val keptVs = new graft.sources.AnnIndex.Manifest(idxRoot).versionCopies
+      val keptVs = new AnnIndex.Manifest(idxRoot).versionCopies
       require(keptVs == Seq(3),
         s"ann_fold must expire manifest versions below its publish, " +
           s"kept: $keptVs")
@@ -3082,31 +2436,15 @@ object EmbedOps {
         SELECT query_id, rnk::INT AS rnk, neighbor_id, cell,
                FALSE AS is_new, ROUND(cos, 6) AS cosine
         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")) { (s, dir) =>
-      val root = graft.core.Fs.rotatingTempRoot("q228_annrb")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_rb" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_rb.root" ->
-          root.resolve("cat").toString)
-      sc.sql("CREATE NAMESPACE graft_cat_rb.default")
-      sc.sql("CREATE TABLE graft_cat_rb.default.vecs (" +
-        "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-        "source STRING, text STRING) TBLPROPERTIES " +
-        "('graft.rowlevel.mode' = 'merge-on-read')")
-      sc.sql("ALTER TABLE graft_cat_rb.default.vecs ADD COLUMNS " +
-        "(vlabel INT, q ARRAY<BIGINT>)")
-      quantizedStaged(sc, dir).createOrReplaceTempView("q228_src")
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_rb.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          s"FROM q228_src WHERE $where")
-      }
-      ins("vec_id % 10 <> 0")
+      val t = new VecTable(s, dir, "graft_cat_rb",
+        graft.core.Fs.rotatingTempRoot("q228_annrb"), mor = true)
+      val sc = t.sc
+      t.ins("vec_id % 10 <> 0")
       graft.core.Phases("build") {
         sc.sql("CALL graft_cat_rb.system.ann_build(" +
           "'default.vecs', 'doc_id', 'q', 'vlabel')")
       }
-      ins("vec_id % 10 = 0")
+      t.ins("vec_id % 10 = 0")
       graft.core.Phases("dml") {
         sc.sql("DELETE FROM graft_cat_rb.default.vecs " +
           "WHERE doc_id % 7 = 3 AND doc_id % 10 <> 0")
@@ -3114,14 +2452,13 @@ object EmbedOps {
       graft.core.Phases("sync") {
         sc.sql("CALL graft_cat_rb.system.ann_sync('default.vecs', 'q')")
       }
-      val tablePath = root.resolve("cat").resolve("default")
-        .resolve("vecs").toString
+      val tablePath = t.path
       val rb = graft.core.Phases("rebuild") {
         sc.sql("CALL graft_cat_rb.system.ann_rebuild(" +
           "'default.vecs', 'q')").head()
       }
-      val idxRoot = graft.sources.AnnIndex.dirFor(tablePath, "q")
-      val L = graft.sources.AnnIndex.load(idxRoot)
+      val idxRoot = AnnIndex.dirFor(tablePath, "q")
+      val L = AnnIndex.load(idxRoot)
       // the swap's post-state, asserted in-gate: ONLY the new era
       // base serves (cursor at the rebuild head, no pending layers),
       // and the old era's dirs are physically unreachable AND gone
@@ -3135,7 +2472,7 @@ object EmbedOps {
         .select(col("doc_id").as("qid"), col("q").as("qv"),
           col("n_chars").as("qn"))
       val out = graft.core.Phases("serve") {
-        graft.sources.AnnIndex.serve(sc, tablePath, "q", qs)
+        AnnIndex.serve(sc, tablePath, "q", qs)
           .withColumn("cell", col("cell").cast("int"))
       }
       out.persist()
@@ -3162,19 +2499,10 @@ object EmbedOps {
         "CALL next to the SELECTs they already write — no Scala, no " +
         "notebook plumbing.",
       Some(annIncOracle)) { (s, dir) =>
-      val root = graft.core.Fs.rotatingTempRoot("q229_annsearch")
-      val sc = graft.core.Sessions.scoped(s,
-        "spark.sql.catalog.graft_cat_as" ->
-          classOf[graft.sources.DocStoreCatalog].getName,
-        "spark.sql.catalog.graft_cat_as.root" ->
-          root.resolve("cat").toString)
+      val t = new VecTable(s, dir, "graft_cat_as",
+        graft.core.Fs.rotatingTempRoot("q229_annsearch"))
+      val sc = t.sc
       graft.core.Phases("setup") {
-        sc.sql("CREATE NAMESPACE graft_cat_as.default")
-        sc.sql("CREATE TABLE graft_cat_as.default.vecs (" +
-          "doc_id BIGINT NOT NULL, n_chars BIGINT, lang STRING, " +
-          "source STRING, text STRING)")
-        sc.sql("ALTER TABLE graft_cat_as.default.vecs ADD COLUMNS " +
-          "(vlabel INT, q ARRAY<BIGINT>)")
         // the query table: same id/vector column NAMES as the indexed
         // table — that correspondence IS the query shape contract
         sc.sql("CREATE TABLE graft_cat_as.default.queries (" +
@@ -3182,28 +2510,22 @@ object EmbedOps {
           "source STRING, text STRING)")
         sc.sql("ALTER TABLE graft_cat_as.default.queries " +
           "ADD COLUMNS (q ARRAY<BIGINT>)")
-        quantizedStaged(sc, dir).createOrReplaceTempView("q229_src")
       }
-      def ins(where: String): Unit = graft.core.Phases("dml") {
-        sc.sql("INSERT INTO graft_cat_as.default.vecs " +
-          "SELECT vec_id, nn, 'x', 's', '', CAST(label AS INT), q " +
-          s"FROM q229_src WHERE $where")
-      }
-      ins("vec_id % 10 <> 0")
+      t.ins("vec_id % 10 <> 0")
       val b = graft.core.Phases("build") {
         sc.sql("CALL graft_cat_as.system.ann_build(" +
           "'default.vecs', 'doc_id', 'q', 'vlabel')").head()
       }
       require(b.getLong(3) > 0, s"ann_build indexed no vectors: $b")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 0")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 1")
-      ins("vec_id % 10 = 0 AND vec_id % 3 = 2")
+      t.ins("vec_id % 10 = 0 AND vec_id % 3 = 0")
+      t.ins("vec_id % 10 = 0 AND vec_id % 3 = 1")
+      t.ins("vec_id % 10 = 0 AND vec_id % 3 = 2")
       graft.core.Phases("sync") {
         sc.sql("CALL graft_cat_as.system.ann_sync('default.vecs', 'q')")
       }
       graft.core.Phases("dml") {
         sc.sql("INSERT INTO graft_cat_as.default.queries " +
-          "SELECT vec_id, nn, 'x', 's', '', q FROM q229_src " +
+          "SELECT vec_id, nn, 'x', 's', '', q FROM graft_cat_as_src " +
           "WHERE vec_id % 10 <> 0 AND vec_id < 5")
       }
       val hits = graft.core.Phases("search") {
@@ -3326,7 +2648,7 @@ object EmbedOps {
           col("nn").as("qn"))
       val vec = nz.crossJoin(broadcast(qs))
         .filter(col("vec_id") =!= col("qid"))
-        .withColumn("c", cosine(dotL(col("qv"), col("q")),
+        .withColumn("c", AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
           col("qn"), col("nn")))
         .withColumn("rv", row_number().over(Window.partitionBy(col("qid"))
           .orderBy(col("c").desc, col("vec_id").asc)))
@@ -3420,92 +2742,145 @@ object EmbedOps {
         FROM r WHERE rnk <= 3 OR nrnk = 1
         ORDER BY query_id, rnk"""
 
-  /** The incremental index's BASE layer (q113's build over the
-    * vec_id % 10 <> 0 slice), materialized once per source dir. */
-  /** (label, sv: array<long>, c) — the integer centroid table of a
-    * (vec_id, q, nn, label) frame. ONE definition for every builder
-    * (base index, filtered layouts, from-scratch audit rebuilds): a
-    * drift between two copies of this fold would silently break the
-    * serve==rebuild and serve==oracle equalities the gates pin. */
-  private def centroidTable(df: DataFrame): DataFrame =
-    graft.sources.AnnIndex.centroidTable(df)
-
-  /** (label, dv: array<long>, dc) — a fragment's per-cell integer
-    * aggregates, computed from the read-back fragment rows (the r15
-    * unpersist shape). Shared by the upsert delta, the multi-fragment
-    * LSM fixture, and the tombstone fixture. */
-  private def fragmentAggregates(back: DataFrame): DataFrame =
-    graft.sources.AnnIndex.fragmentAggregates(back)
-
-  private def ivfIncBase(s: SparkSession, dir: String): String =
-    graft.core.Scratch.materialize("ivf_index_inc",
-      s"v2|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
-      val base = quantized(s, dir).filter(col("vec_id") % 10 =!= 0)
-      centroidTable(base).write.mode("overwrite")
-        .parquet(java.nio.file.Paths.get(p, "centroids").toString)
-      clusterForWrite(base, "label").write.mode("overwrite")
-        .partitionBy("label")
-        .parquet(java.nio.file.Paths.get(p, "vectors").toString)
+  /** A gate-local docstore table of the staged quantized rows (doc_id =
+    * vec_id, n_chars = nn, vlabel = label, q; `src` adds the filtered-
+    * family stratum) under a scoped catalog `cat` rooted at `root` —
+    * the table every docstore-backed lifecycle gate indexes. `q` joins
+    * by ALTER so the arrays ride the nested evolved-column codec. */
+  private final class VecTable(s: SparkSession, dir: String, cat: String,
+      root: java.nio.file.Path, mor: Boolean = false,
+      src: Boolean = false) {
+    val sc: SparkSession = graft.core.Sessions.scoped(s,
+      s"spark.sql.catalog.$cat" ->
+        classOf[graft.sources.DocStoreCatalog].getName,
+      s"spark.sql.catalog.$cat.root" -> root.resolve("cat").toString)
+    val name = s"$cat.default.vecs"
+    val path: String =
+      root.resolve("cat").resolve("default").resolve("vecs").toString
+    graft.core.Phases("ddl") {
+      sc.sql(s"CREATE NAMESPACE $cat.default")
+      sc.sql(s"CREATE TABLE $name (doc_id BIGINT NOT NULL, " +
+        "n_chars BIGINT, lang STRING, source STRING, text STRING)" +
+        (if (mor) " TBLPROPERTIES ('graft.rowlevel.mode' = 'merge-on-read')"
+         else ""))
+      sc.sql(s"ALTER TABLE $name ADD COLUMNS (vlabel INT, " +
+        (if (src) "src INT, " else "") + "q ARRAY<BIGINT>)")
+      val rows = quantizedStaged(sc, dir)
+      (if (!src) rows else rows.withColumn("src",
+          when(col("label") <= 1, lit(0L))
+            .otherwise(lit(1L) + pmod(col("vec_id"), lit(2)))))
+        .createOrReplaceTempView(s"${cat}_src")
     }
-
-  /** The upsert batch as a MANAGED delta fragment (r15 verdict item
-    * 2): assignment runs against the broadcast stored centroids, the
-    * assigned batch persists cell-partitioned under `vectors/`, and
-    * the per-cell integer sums/counts the centroid update needs
-    * persist under `dcent/` — computed by READING THE FRAGMENT BACK
-    * (not by re-running or caching the assignment; the r15 advice's
-    * unpersist shape). Everything here is new-batch-sized. */
-  private def annIncDelta(s: SparkSession, dir: String): String = {
-    val idx = ivfIncBase(s, dir)
-    graft.core.Scratch.materialize("ivf_inc_delta",
-      s"v3|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
-      val centroids = s.read.parquet(s"$idx/centroids")
-      // arrivals are UNLABELED as far as the index is concerned — the
-      // cell is the assignment's output, not an input
-      val newb = quantized(s, dir).filter(col("vec_id") % 10 === 0)
-        .drop("label")
-      val ad = newb.crossJoin(broadcast(withCentNorm(centroids)))
-        .withColumn("d", cellDist(col("q"), col("sv"), col("c"),
-          col("nn"), col("sn")))
-      val wa = Window.partitionBy(col("vec_id"))
-        .orderBy(col("d").asc, col("label").asc)
-      clusterForWrite(ad.withColumn("ar", row_number().over(wa))
-          .filter(col("ar") === 1)
-          .select(col("vec_id"), col("q"), col("nn"), col("label")), "label")
-        .write.partitionBy("label")
-        .parquet(java.nio.file.Paths.get(p, "vectors").toString)
-      val back = s.read.parquet(
-        java.nio.file.Paths.get(p, "vectors").toString)
-      fragmentAggregates(back).write
-        .parquet(java.nio.file.Paths.get(p, "dcent").toString)
+    def ins(where: String): Unit = graft.core.Phases("dml") {
+      sc.sql(s"INSERT INTO $name SELECT vec_id, nn, 'x', 's', '', " +
+        "CAST(label AS INT), " + (if (src) "CAST(src AS INT), " else "") +
+        s"q FROM ${cat}_src WHERE $where")
+      ()
+    }
+    def del(where: String): Unit = graft.core.Phases("dml") {
+      sc.sql(s"DELETE FROM $name WHERE $where"); ()
     }
   }
 
-  /** Stored centroids + the fragment's per-cell integer sums/counts —
-    * the associative fold both serving (q207) and the nightly fold
-    * (q212) publish. The N = 1 case of [[foldedCentroidsAll]]. */
-  private def foldedCentroids(s: SparkSession, idx: String,
-      delta: String): DataFrame =
-    foldedCentroidsAll(s, idx, Seq(s"$delta/dcent"))
+  /** The pristine LSM fixture of the q207/q212/q217 triple: the base
+    * slice (vec_id % 10 <> 0) built into an [[AnnIndex]], then three
+    * arrival commits synced as three pending fragments assigned
+    * against the pinned quantizer (which is what lets the triple share
+    * one oracle). Built once per source dir; returns the table path.
+    * Gates that fold operate on a per-invocation copy. */
+  private[graft] def annIncTable(s: SparkSession, dir: String): String =
+    graft.core.Scratch.materialize("ann_inc_table",
+      s"v1|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
+      val t = new VecTable(s, dir, "graft_cat_ib", java.nio.file.Paths.get(p))
+      t.ins("vec_id % 10 <> 0")
+      AnnIndex.build(t.path, "doc_id", "q", "vlabel")
+      (0 to 2).foreach(k => t.ins(s"vec_id % 10 = 0 AND vec_id % 3 = $k"))
+      AnnIndex.sync(t.path, "q"); ()
+    } + "/cat/default/vecs"
 
-  /** The fold's INPUT frame — base rows of AFFECTED cells only
-    * (partition pruning; untouched cells are never read) unioned with
-    * the delta fragment, is_new preserved. graft-visible so
-    * PlanAuditSpec can pin the pruned plan directly. The N = 1 case
-    * of [[annLsmFoldInput]]. */
-  private[graft] def annFoldInput(s: SparkSession, idx: String,
-      delta: String): DataFrame =
-    annLsmFoldInput(s, idx, Seq(s"$delta/vectors"))
+  /** [[annIncTable]] after the nightly fold — q212's serving layout. */
+  private def annFoldedTable(s: SparkSession, dir: String): String =
+    graft.core.Scratch.materialize("ann_inc_folded",
+      s"v1|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
+      val t = java.nio.file.Paths.get(p, "vecs")
+      graft.core.Fs.copyRecursively(
+        java.nio.file.Paths.get(annIncTable(s, dir)), t)
+      AnnIndex.fold(t.toString, "q"); ()
+    } + "/vecs"
 
-  /** graft-visible fixture accessors for the fold plan audit. */
-  private[graft] def annIncPaths(s: SparkSession, dir: String)
-      : (String, String) = (ivfIncBase(s, dir), annIncDelta(s, dir))
+  /** q221's pristine fixture: the base slice indexed, then ONE
+    * merge-on-read DELETE of vec_id % 7 = 3 synced as a pending
+    * tombstone layer. */
+  private[graft] def annTombTable(s: SparkSession, dir: String): String =
+    graft.core.Scratch.materialize("ann_tomb_table",
+      s"v1|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
+      val t = new VecTable(s, dir, "graft_cat_tb",
+        java.nio.file.Paths.get(p), mor = true)
+      t.ins("vec_id % 10 <> 0")
+      AnnIndex.build(t.path, "doc_id", "q", "vlabel")
+      t.del("doc_id % 7 = 3")
+      AnnIndex.sync(t.path, "q"); ()
+    } + "/cat/default/vecs"
 
-  /** Shared DuckDB oracle of the filtered-LSM pair: q225 runs the
-    * lifecycle gate-locally, q226 runs it through the catalog's
-    * ann_* procedures over a docstore table — the SAME slices, the
-    * same assignment and add/subtract maintenance, so one oracle pins
-    * both (and the two implementations pin each other). */
+  /** q225's pristine fixture: the base slice built into a filtered
+    * family (one sub-index per src), then src 0's upsert commit (the
+    * held-out vec_id % 10 = 0 arrivals) and delete commit (its
+    * vec_id % 7 = 3 base rows) left PENDING on the change feed — the
+    * gate's sync is part of its measured lifecycle. */
+  private def annFamilyTable(s: SparkSession, dir: String): String =
+    graft.core.Scratch.materialize("ann_family_table",
+      s"v1|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
+      val t = new VecTable(s, dir, "graft_cat_fb",
+        java.nio.file.Paths.get(p), mor = true, src = true)
+      t.ins("vec_id % 10 <> 0")
+      AnnIndex.build(t.path, "doc_id", "q", "vlabel", "src")
+      t.ins("vec_id % 10 = 0 AND src = 0")
+      t.del("doc_id % 7 = 3 AND src = 0 AND doc_id % 10 <> 0")
+    } + "/cat/default/vecs"
+
+  /** The oracles' query set: the `where` rows of the staged corpus. */
+  private def annQueries(s: SparkSession, dir: String,
+      where: String): DataFrame =
+    quantizedStaged(s, dir).filter(expr(where))
+      .select(col("vec_id").as("qid"), col("q").as("qv"),
+        col("nn").as("qn"))
+
+  /** Serve the oracles' query set (the `qsWhere` rows) from the index
+    * on `q` of a gate table. The index stores cells as LONG; the
+    * oracles' cell column is the INT label. */
+  private def annServe(s: SparkSession, dir: String, tablePath: String,
+      qsWhere: String = "vec_id < 5 AND vec_id % 10 <> 0",
+      filter: Option[Long] = None): DataFrame =
+    AnnIndex.serve(s, tablePath, "q", annQueries(s, dir, qsWhere),
+        filter = filter)
+      .withColumn("cell", col("cell").cast("int"))
+
+  /** The in-gate row-for-row equality of two serves. */
+  private def requireSame(before: Array[Row], after: Array[Row],
+      what: String): Unit =
+    require(before.toSeq == after.toSeq,
+      s"$what: ${before.toSeq.diff(after.toSeq)} vs " +
+        s"${after.toSeq.diff(before.toSeq)}")
+
+  /** The vector ids an index's pending tombstone layers mask. */
+  private def tombstonedIds(s: SparkSession, L: AnnIndex.Layers): Set[Long] =
+    L.tombs.map(tb => s.read.parquet(L.abs(s"$tb/keys")).select("vec_id"))
+      .reduce(_.unionByName(_)).collect().map(_.getLong(0)).toSet
+
+  /** Rows of `ids` the index's newest fold level still holds — 0 once
+    * compaction physically dropped every tombstoned row. */
+  private def foldedLeaks(s: SparkSession, idxRoot: java.nio.file.Path,
+      ids: Set[Long]): Long = {
+    val L = AnnIndex.load(idxRoot)
+    s.read.parquet(L.abs(s"${L.folds.last}/cells"))
+      .filter(col("vec_id").isin(ids.toSeq: _*)).count()
+  }
+
+  /** Shared DuckDB oracle of the filtered-LSM pair: q225 drives the
+    * AnnIndex Scala API over a Scratch-built family, q226 runs the
+    * whole lifecycle through the catalog's ann_* procedures — the SAME
+    * slices, the same assignment and add/subtract maintenance, so one
+    * oracle pins both. */
   private lazy val filteredLsmOracle: String = s"""
         WITH v AS (SELECT vec_id, label, $oQuant AS q FROM embeddings),
         n0 AS (SELECT vec_id, label, q, $oNorm2 AS nn FROM v),
@@ -3619,36 +2994,7 @@ object EmbedOps {
           FROM r1 WHERE rnk <= 3
         ) ORDER BY flt_src, query_id, rnk"""
 
-  /** The filtered-LSM fixture (q225): BASE slice (vec_id % 10 <> 0)
-    * laid out src=<k>/label=<cell>/ with per-src centroid tables over
-    * the base only (the pinned per-src quantizers), plus the held-out
-    * src-0 arrival batch (vec_id % 10 = 0 in the src-0 stratum,
-    * unassigned — assignment is the upsert's job). Pristine and
-    * immutable; the lifecycle writes fragments under a per-invocation
-    * temp root, never here. */
-  private[graft] def filteredLsmIdx(s: SparkSession, dir: String): String =
-    graft.core.Scratch.materialize("ivf_filtered_lsm",
-      s"v2|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
-      val v = quantized(s, dir).withColumn("src",
-        when(col("label") <= 1, lit(0L))
-          .otherwise(lit(1L) + pmod(col("vec_id"), lit(2))))
-      clusterForWrite(v.filter(col("vec_id") % 10 =!= 0), "src", "label")
-        .write.partitionBy("src", "label")
-        .parquet(java.nio.file.Paths.get(p, "vectors").toString)
-      val back = s.read.parquet(
-        java.nio.file.Paths.get(p, "vectors").toString)
-      clusterForWrite((0L to 2L).map(k =>
-          centroidTable(back.filter(col("src") === k).drop("src"))
-            .withColumn("src", lit(k)))
-        .reduce(_.unionByName(_)), "src")
-        .write.partitionBy("src")
-        .parquet(java.nio.file.Paths.get(p, "scentroids").toString)
-      v.filter(col("vec_id") % 10 === 0 && col("src") === 0).drop("src")
-        .write.parquet(java.nio.file.Paths.get(p, "arrivals").toString)
-    }
-
-  /** (vec_id, q, nn, label) projection of the CDC gates' vecs table
-    * (q214 freshness / q222 forget share one table layout). */
+  /** (vec_id, q, nn, label) projection of the CDC gates' vecs table. */
   private def cdcVecsOf(df: DataFrame): DataFrame = df.select(
     col("doc_id").as("vec_id"), col("q"),
     col("n_chars").as("nn"), col("vlabel").as("label"))
@@ -3656,56 +3002,101 @@ object EmbedOps {
   /** Driver-collected per-cell integer aggregates — the CDC gates'
     * metastore-sized centroid-state entries. */
   private def cdcCellAgg(df: DataFrame): Array[(Int, Seq[Long], Long)] =
-    centroidTable(df).collect()
+    AnnIndex.centroidTable(df).collect()
       .map(r => (r.getInt(0), r.getSeq[Long](1), r.getLong(2)))
 
-  /** The CDC maintenance gates' serve: probe `cents`, prune the pool
-    * to probed cells, exact rerank top-3. Cells with c <= 0 never
-    * probe (r17 review): a maintenance batch that empties a cell
-    * leaves a ZERO centroid whose probe distance is exactly 0, so the
-    * dead cell would win a probe slot while contributing no
-    * candidates — and the from-scratch oracle, built over survivors
-    * only, never sees the label at all. */
-  private[graft] def annStateServe(qs: DataFrame, cents0: DataFrame,
-      pool: DataFrame): DataFrame =
-    annStateServeBy(qs, cents0,
-      cells => pool.filter(col("label").isin(cells: _*)))
+  private type CdcState =
+    scala.collection.mutable.HashMap[Int, (Array[Long], Long)]
 
-  /** The pool-resolution variant: `poolOf` receives the probed cell
-    * ids and builds the (already pruned) candidate pool — the hook
-    * the manifest-layered gates (q221) route overlay-vs-base reads
-    * through. ONE serve definition for every state-probing gate.
-    * The probe runs ONCE ([[graft.sources.AnnIndex.probePairs]] — the
-    * r19 serveOne shape): without it the final top-k job re-executed
-    * the whole probe subtree (crossJoin + window) building its
-    * broadcast, so every serve paid the probe twice (r22 phase
-    * attribution: serve_pre/serve_post dominated the lifecycle
-    * gates). probeCells filters c > 0 exactly as this serve did. */
-  private[graft] def annStateServeBy(qs: DataFrame, cents0: DataFrame,
-      poolOf: Seq[Any] => DataFrame): DataFrame = {
-    val (cells, probe) = graft.sources.AnnIndex.probePairs(
-      qs.sparkSession, qs, cents0, 2)
-    val pruned = poolOf(cells.map(c => c: Any))
-    val cand = pruned.join(broadcast(probe),
-        pruned("label") === probe("label") &&
-          col("vec_id") =!= col("qid"))
-      .withColumn("cos",
-        cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
-    val wr = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    cand.withColumn("rnk", row_number().over(wr))
-      .filter(col("rnk") <= 3)
-      .select(col("qid").as("query_id"), col("rnk"),
-        col("vec_id").as("neighbor_id"),
-        pruned("label").as("cell"),
-        round(col("cos"), 6).as("cosine"))
+  /** ADD (sign 1) or SUBTRACT (sign -1) per-cell aggregates into the
+    * driver-held state — integer sums are a group, so exact in any
+    * order. */
+  private def cdcApply(state: CdcState, agg: Array[(Int, Seq[Long], Long)],
+      sign: Int): Unit =
+    agg.foreach { case (l, sv, c) =>
+      val (os, oc) = state.getOrElse(l, (new Array[Long](DIM), 0L))
+      var i = 0
+      while (i < DIM) { os(i) += sign * sv(i); i += 1 }
+      state(l) = (os, oc + sign * c)
+    }
+
+  /** The CDC gates' nightly build: the version-`v` snapshot laid out
+    * cell-partitioned under `baseDir` plus the driver-held integer
+    * centroid state (cells x (dim + 1) integers — the metastore-sized
+    * piece of a production index). ONE snapshot scan feeds the layout
+    * write AND the state off the cache, the two actions concurrent
+    * (guide §2.6). */
+  private def cdcBuild(t: VecTable, v: Long, baseDir: String): CdcState = {
+    val state: CdcState = scala.collection.mutable.HashMap()
+    graft.core.Phases("build") {
+      val v1c = cdcVecsOf(
+        t.sc.sql(s"SELECT * FROM ${t.name} VERSION AS OF $v")).persist()
+      try {
+        var agg: Array[(Int, Seq[Long], Long)] = null
+        AnnIndex.inParallel(
+          AnnIndex.clusterForWrite(v1c, "label").write.partitionBy("label")
+            .parquet(baseDir),
+          { agg = cdcCellAgg(v1c) })
+        cdcApply(state, agg, 1)
+      } finally { v1c.unpersist(); () }
+    }
+    state
   }
 
-  /** The LSM gates' layer manifest — the ONE shared definition now
-    * lives in [[graft.sources.AnnIndex.Manifest]] (r17 verdict item 2
-    * promoted the whole lifecycle to a first-class docstore object);
-    * the gate-local alias keeps q217/q221 reading naturally. */
-  private type LsmManifest = graft.sources.AnnIndex.Manifest
+  private def stateFrame(s: SparkSession, state: CdcState): DataFrame = {
+    import s.implicits._
+    state.toSeq.map { case (l, (sv, c)) => (l, sv.toSeq, c) }
+      .toDF("label", "sv", "c")
+  }
+
+  /** Drain `t`'s change feed from `fromVersion` (AvailableNow, one
+    * micro-batch per commit — version-paced offsets) through `each`,
+    * which runs on the stream thread under the caller's phase path. */
+  private def drainChanges(t: VecTable, fromVersion: Long,
+      root: java.nio.file.Path)(each: DataFrame => Unit): Unit =
+    graft.core.Phases("stream") {
+      val phases = graft.core.Phases.snapshot()
+      val q = t.sc.readStream.format("graft-docstore")
+        .option("path", t.path)
+        .option("readChangeFeed", "true")
+        .option("startingVersion", fromVersion.toString)
+        .load()
+        .writeStream
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          graft.core.Phases.withSnapshot(phases)(each(batch))
+        }
+        .start()
+      try q.awaitTermination() finally q.stop()
+    }
+
+  /** The CDC gates' serve over driver-held state: probe `cents` ONCE
+    * ([[AnnIndex.probePairs]] — cells with c <= 0 never probe: a batch
+    * that empties a cell leaves a zero centroid whose distance would
+    * win a slot while holding no candidates), read only probed cells of
+    * `pool`, exact top-3 ([[AnnIndex.topKWithBestNew]] over an all-base
+    * pool adds no best-new rows). */
+  private def stateServe(qs: DataFrame, cents: DataFrame,
+      pool: DataFrame): DataFrame = {
+    val (cells, probe) = AnnIndex.probePairs(qs.sparkSession, qs, cents, 2)
+    AnnIndex.topKWithBestNew(pool.filter(col("label").isin(cells: _*))
+        .withColumn("is_new", lit(false)), probe, 3)
+      .drop("is_new")
+  }
+
+  /** The CDC gates' `fresh` audit: the maintained serve joined row by
+    * row against a from-scratch rebuild over the table's CURRENT
+    * snapshot. The rebuild's centroids re-derive from the snapshot —
+    * probing the maintained state would audit it against itself (r17
+    * review) — and the snapshot persists so the centroid fold, probe
+    * collect and pool read share one scan. */
+  private def cdcFreshAudit(t: VecTable, qs: DataFrame,
+      incr: DataFrame): DataFrame = graft.core.Phases("audit") {
+    val cur = cdcVecsOf(t.sc.read.format("graft-docstore")
+      .option("path", t.path).load()).persist()
+    freshAudit(incr, stateServe(qs, AnnIndex.centroidTable(cur), cur))
+  }
 
   /** Row-by-row freshness audit: the maintained serve joined against
     * a from-scratch rebuild (whose centroids MUST be derived from the
@@ -3730,111 +3121,4 @@ object EmbedOps {
       .orderBy("query_id", "rnk")
   }
 
-  /** (base index, pristine tombstone fragment) for q221 and its plan
-    * audit. The fragment is Scratch-immutable: delete requests ride
-    * the corpus CDF with their rows, so it lands cell-partitioned
-    * (`keys/`) WITH the per-cell integer aggregates to subtract
-    * (`dcent/`) — the compaction lifecycle operates on per-invocation
-    * COPIES. */
-  private[graft] def annTombPaths(s: SparkSession, dir: String)
-      : (String, String) = {
-    val idx = ivfIncBase(s, dir)
-    val pristine = graft.core.Scratch.materialize("ivf_tomb_frag",
-      s"v2|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
-      val dead = s.read.parquet(s"$idx/vectors")
-        .filter(col("vec_id") % 7 === 3)
-      clusterForWrite(dead.select(col("vec_id"), col("label")), "label")
-        .write.partitionBy("label")
-        .parquet(java.nio.file.Paths.get(p, "keys").toString)
-      val back = s.read.parquet(
-        java.nio.file.Paths.get(p, "keys").toString)
-        .join(s.read.parquet(s"$idx/vectors"), Seq("vec_id", "label"))
-      fragmentAggregates(back).write.parquet(
-        java.nio.file.Paths.get(p, "dcent").toString)
-    }
-    (idx, pristine)
-  }
-
-  /** THREE accumulated delta fragments (q217's LSM lifecycle input),
-    * each an upsert batch assigned against the PINNED base coarse
-    * quantizer — the FAISS/Milvus posture: the cell space is fixed at
-    * build time, so fold results are arrival-order-independent and
-    * the union of N fragments assigns exactly like one big batch
-    * (which is what lets q207/q212/q217 share one oracle). Pristine
-    * and immutable (Scratch): the retire lifecycle operates on
-    * per-invocation COPIES. */
-  private[graft] def annLsmFrags(s: SparkSession, dir: String): String = {
-    val idx = ivfIncBase(s, dir)
-    graft.core.Scratch.materialize("ivf_lsm_frags",
-      s"v3|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
-      val centroids = s.read.parquet(s"$idx/centroids")
-      (0 to 2).foreach { k =>
-        val batch = quantized(s, dir)
-          .filter(col("vec_id") % 10 === 0 &&
-            pmod(expr("vec_id div 10"), lit(3)) === k)
-          .drop("label")
-        val ad = batch.crossJoin(broadcast(withCentNorm(centroids)))
-          .withColumn("d", cellDist(col("q"), col("sv"), col("c"),
-            col("nn"), col("sn")))
-        val wa = Window.partitionBy(col("vec_id"))
-          .orderBy(col("d").asc, col("label").asc)
-        val vecs = java.nio.file.Paths.get(p, s"frag-$k", "vectors")
-        clusterForWrite(ad.withColumn("ar", row_number().over(wa))
-            .filter(col("ar") === 1)
-            .select(col("vec_id"), col("q"), col("nn"), col("label")),
-            "label")
-          .write.partitionBy("label").parquet(vecs.toString)
-        // per-fragment integer centroid aggregates, read BACK from
-        // the fragment (the same unpersist shape as annIncDelta)
-        val back = s.read.parquet(vecs.toString)
-        fragmentAggregates(back).write.parquet(
-          java.nio.file.Paths.get(p, s"frag-$k", "dcent").toString)
-      }
-    }
-  }
-
-  /** Base centroids + the SUMMED per-cell integer aggregates of N
-    * fragments — the associative fold at any fragment count (the
-    * N = 1 case is [[foldedCentroids]]). Metadata-sized on the
-    * fragment side: cells x (dim + 1) integers per fragment. */
-  private def foldedCentroidsAll(s: SparkSession, idx: String,
-      fragDcents: Seq[String]): DataFrame = {
-    // layer-by-layer broadcast zip_with joins, not union+posexplode-
-    // regroup (guide §2.4): each fragment's dcent is unique per label
-    // (fragmentAggregates groups by label), so sequential elementwise
-    // integer adds equal the summed form exactly and the fold carries
-    // ZERO shuffle exchanges — this frame runs inside every probe job
-    // of the multi-fragment gates (the AnnIndex.serveCentroids twin)
-    fragDcents.foldLeft(s.read.parquet(s"$idx/centroids")) { (acc, p) =>
-      acc.join(broadcast(s.read.parquet(p)), Seq("label"), "left")
-        .select(col("label"),
-          when(col("dv").isNull, col("sv"))
-            .otherwise(zip_with(col("sv"), col("dv"), (a, b) => a + b))
-            .as("sv"),
-          (col("c") + coalesce(col("dc"), lit(0L))).as("c"))
-    }
-  }
-
-  /** The multi-fragment fold's INPUT frame — ONE pass over base rows
-    * of AFFECTED cells (partition-pruned; untouched cells never read)
-    * plus every accumulated fragment, is_new preserved. graft-visible
-    * so PlanAuditSpec pins the pruned plan over the pristine
-    * fixture. */
-  private[graft] def annLsmFoldInput(s: SparkSession, idx: String,
-      fragVecDirs: Seq[String]): DataFrame = {
-    val frags = fragVecDirs.map(p => s.read.parquet(p))
-      .reduce(_.unionByName(_))
-    val affected = frags.select("label").distinct().collect().map(_.get(0))
-    s.read.parquet(s"$idx/vectors")
-      .filter(col("label").isin(affected: _*))
-      .withColumn("is_new", lit(false))
-      .unionByName(frags.withColumn("is_new", lit(true)))
-  }
-
-  /** Shared serve tail of the incremental pair: exact cosine rerank
-    * inside the probed pool, top-3 overall PLUS each query's best NEW
-    * neighbor (at its overall rank) — the upserted-vectors-are-
-    * searchable proof even when arrivals don't crack the top-3. */
-  private def annIncServe(pool: DataFrame, probe: DataFrame): DataFrame =
-    graft.sources.AnnIndex.topKWithBestNew(pool, probe, 3)
 }

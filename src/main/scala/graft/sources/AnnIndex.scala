@@ -68,7 +68,7 @@ object AnnIndex {
 
   // ------------------------------------------------------------------
   // canonical vector math — ONE definition engine-wide (the gate suite
-  // in graft.queries.EmbedOps delegates here; a drift between two
+  // in graft.queries.EmbedOps calls these directly; a drift between two
   // copies of these folds would silently break serve == oracle)
   // ------------------------------------------------------------------
 
@@ -219,8 +219,7 @@ object AnnIndex {
 
   // ------------------------------------------------------------------
   // manifest — `<kind>,<path>` lines, atomic-rename publish, retained
-  // version copies (the q217/q221 LsmManifest, promoted to ONE shared
-  // definition)
+  // version copies
   // ------------------------------------------------------------------
 
   final class Manifest(val root: Path) {
@@ -611,6 +610,40 @@ object AnnIndex {
     } finally { proj.unpersist(); () }
   }
 
+  /** The streaming face of [[sync]]: apply ONE change-feed micro-batch
+    * (the docstore CDC stream's rows, `_change_type` and
+    * `_commit_version` included) instead of reading the window itself —
+    * a `foreachBatch` over `readChangeFeed` started at `synced + 1`
+    * hands each batch here. Rows of versions at or below the synced
+    * cursor are dropped, so a batch replayed after a crash
+    * (foreachBatch is at-least-once) is a no-op. The per-version
+    * commits and the crash contract are [[syncRange]]'s. Plain indexes
+    * only: a family routes through [[sync]]. */
+  def syncBatch(tablePath: String, vecCol: String,
+      changes: DataFrame): SyncStats = {
+    val s = changes.sparkSession
+    val root = dirFor(tablePath, vecCol)
+    require(!isFamily(root),
+      s"syncBatch needs a plain index; the '$vecCol' index is a " +
+        "filtered family — call sync")
+    val start = load(root)
+    // persist, not localCheckpoint: a micro-batch's lineage is shallow,
+    // and the eager checkpoint measured as a per-batch regression
+    val proj = project(
+      changes.filter(col("_commit_version") > start.synced),
+      start.idCol, start.vecCol, start.labelCol).persist()
+    try {
+      val routed = routeCounts(proj, Seq(col("_commit_version")),
+        r => r.getLong(0))
+      if (routed.isEmpty)
+        return SyncStats(start.synced, start.synced, 0, 0, 0, 0)
+      val head = routed.keys.max
+      val (frags, tombs, nIns, nDel) = syncRange(s, root,
+        baseCentroidsOf(s, start), proj, (start.synced + 1) to head, routed)
+      SyncStats(start.synced, head, frags, tombs, nIns, nDel)
+    } finally { proj.unpersist(); () }
+  }
+
   /** Windowed (key -> (inserts, deletes)) routing counts in ONE
     * aggregation over the cached change window — what lets the
     * per-version maintenance loop skip the jobs its slice doesn't
@@ -937,14 +970,14 @@ object AnnIndex {
         s"change rows carry ${fam.filterCol} values with no " +
           s"sub-index (${unknown.mkString(",")}) — CALL ann_drop + " +
           "ann_build to re-partition")
-      // one syncRange per sub — subs are INDEPENDENT (own root, own
-      // manifest + commit lock, own synced cursor, disjoint window
-      // slice), so they run concurrently (guide §2.6) while each
-      // sub's versions stay serial against its own manifest inside
-      // syncRange. The crash contract is unchanged in kind: a crash
-      // leaves every sub at its own committed cursor and a rerun
-      // replays only the behind subs, off a fresh window read.
-      val perSubStats = inParallelMap(fam.subs) { k =>
+      // one syncRange per sub, in sub order, each against its own
+      // manifest and synced cursor: a crash leaves every sub at its
+      // own committed cursor and a rerun replays only the behind
+      // subs, off a fresh window read. Serial on purpose: running the
+      // subs concurrently measured no win (an interleaved A/B on
+      // q225/q226 — a window's change rows usually land in one sub,
+      // the others only advance their cursors)
+      val perSubStats = fam.subs.map { k =>
         val subVersions = (load(fam.subRoot(k)).synced + 1) to head
         if (subVersions.isEmpty) (0L, 0L, 0L, 0L)
         else {
@@ -1071,7 +1104,7 @@ object AnnIndex {
     * put 3 shuffle exchanges inside EVERY probe job (serveCentroids
     * runs inside serve_plan); this form is exchange-free — pending
     * layers are few by the fold cadence, so the join chain stays
-    * shallow. q225's applyDelta is the same shape. */
+    * shallow. */
   def serveCentroids(s: SparkSession, L: Layers): DataFrame = {
     val sealed0 = L.folds.lastOption
       .map(f => s.read.schema(centroidSchema)
@@ -1178,10 +1211,9 @@ object AnnIndex {
     * local join instead of re-executing the whole probe subtree
     * (centroid fold + crossJoin + window) behind its broadcast. The
     * r19 serveOne fix, factored out so the gate-local serves
-    * (EmbedOps q214/q217/q218/q221/q222/q224/q225) share it — r22
-    * phase attribution showed each of their serves still paying the
-    * probe twice (once for the cells collect, once rebuilding the
-    * broadcast). */
+    * (EmbedOps q214/q218/q224) share it — r22 phase attribution showed
+    * each of their serves still paying the probe twice (once for the
+    * cells collect, once rebuilding the broadcast). */
   private[graft] def probePairs(s: SparkSession, qs: DataFrame,
       cents: DataFrame, nprobe: Int): (Seq[Long], DataFrame) = {
     // getAs[Number]: qid's type is the CALLER's (an Int qid worked
@@ -1337,14 +1369,24 @@ object AnnIndex {
     foldOne(s, root)
   }
 
-  private def foldOne(s: SparkSession, root: Path): FoldStats = {
-    val L = load(root)
-    if (L.frags.isEmpty && L.tombs.isEmpty)
-      return FoldStats(0, 0, 0, 0)
+  /** What a fold rewrites: the cells the pending fragments and
+    * tombstones cover (directory metadata) and the current pool of
+    * exactly those cells — base and fold reads pruned to them.
+    * graft-visible so PlanAuditSpec pins the pruned plan. */
+  private[graft] def foldInput(s: SparkSession, L: Layers)
+      : (Set[Long], DataFrame) = {
     val affected = (L.frags.map(f => coveredCells(
         Paths.get(L.abs(s"$f/vectors")))) ++
       L.tombs.map(t => coveredCells(Paths.get(L.abs(s"$t/keys")))))
       .foldLeft(Set.empty[Long])(_ ++ _)
+    (affected, resolvePool(s, L, affected.toSeq))
+  }
+
+  private def foldOne(s: SparkSession, root: Path): FoldStats = {
+    val L = load(root)
+    if (L.frags.isEmpty && L.tombs.isEmpty)
+      return FoldStats(0, 0, 0, 0)
+    val (affected, pool) = foldInput(s, L)
     val foldRel = s"fold-${new Manifest(root).currentVersion + 1}"
     // a crashed earlier attempt may have left this dir half-written
     // and unreachable (its manifest swap never ran) — clear it so the
@@ -1356,7 +1398,7 @@ object AnnIndex {
     // PRE-fold layer aggregates, not the new cells dir) — concurrent.
     graft.core.Phases("cells_write") {
       inParallel(
-        clusterForWrite(resolvePool(s, L, affected.toSeq), "label")
+        clusterForWrite(pool, "label")
           .write.partitionBy("label")
           .parquet(root.resolve(foldRel).resolve("cells").toString),
         serveCentroids(s, L).write

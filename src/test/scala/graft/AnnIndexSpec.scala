@@ -1065,4 +1065,37 @@ class AnnIndexSpec extends SparkSpec {
     assert(AnnIndex.load(root3).base.startsWith("base-"),
       "the live era itself must survive the sweep")
   }
+
+  test("probePairs never probes an emptied cell (c = 0 zero centroid)") {
+    // a maintenance batch that deletes EVERY vector of a cell leaves
+    // (sv = 0-vector, c = 0) in the subtracted state; its probe
+    // distance is exactly 0, so without the c > 0 guard the dead cell
+    // would win a probe slot for every query while contributing zero
+    // candidates (r17 review scenario — the shipped fixtures delete
+    // 1-in-7 per cell and never empty one, hence this synthetic pin)
+    val s = spark
+    import s.implicits._
+    val dim = 4
+    // cell 0: EMPTIED (zero centroid, c = 0); cells 1, 2: live
+    val cents = Seq(
+      (0, Seq.fill(dim)(0L), 0L),
+      (1, Seq(1000L, 0L, 0L, 0L), 1L),
+      (2, Seq(0L, 1000L, 0L, 0L), 1L)).toDF("label", "sv", "c")
+    val pool = Seq(
+      (11L, Seq(1000L, 0L, 0L, 0L), 1000000L, 1),
+      (22L, Seq(0L, 1000L, 0L, 0L), 1000000L, 2)
+    ).toDF("vec_id", "q", "nn", "label")
+    val qs = Seq((99L, Seq(700L, 700L, 0L, 0L), 980000L))
+      .toDF("qid", "qv", "qn")
+    val (cells, probe) = AnnIndex.probePairs(s, qs, cents, 2)
+    val out = AnnIndex.topKWithBestNew(
+        pool.filter(col("label").isin(cells: _*))
+          .withColumn("is_new", lit(false)), probe, 3)
+      .collect()
+    // both live cells probed (nprobe = 2), both candidates returned —
+    // the dead cell stole neither slot
+    assert(cells.toSet == Set(1L, 2L), cells.mkString(";"))
+    assert(out.map(_.getLong(2)).toSet == Set(11L, 22L),
+      out.mkString(";"))
+  }
 }

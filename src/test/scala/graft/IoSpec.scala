@@ -77,4 +77,24 @@ class IoSpec extends SparkSpec {
     // required column absent → None
     assert(Readers.optionalCsv(spark, p, ";", Seq("Outra_Coluna")) === None)
   }
+
+  test("S1: charset probes of a CSV output dir release their directory handles") {
+    // a Spark CSV output dir: part file + _SUCCESS marker. Every probe
+    // lists the dir; none of the charsets decodes the bytes, so each
+    // call is probes only (the refusal fires before any Spark read)
+    val dir = Files.createTempDirectory("io_fd")
+    write(dir, "part-00000.csv", "a;b\nação;1\n", "UTF-8")
+    write(dir, "_SUCCESS", "", "UTF-8")
+    def openFds(): Int = {
+      val l = Files.list(java.nio.file.Paths.get("/proc/self/fd"))
+      try l.count().toInt finally l.close()
+    }
+    val before = openFds()
+    (1 to 200).foreach { _ =>
+      intercept[IllegalArgumentException](Readers.csvWithEncodingRetry(
+        spark, dir.toString, charsets = Seq("US-ASCII")))
+    }
+    val grown = openFds() - before
+    assert(grown < 50, s"200 probes of a directory leaked $grown fds")
+  }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
 import graft.core.Tables
 import graft.queries.Registry
+import graft.sources.AnnIndex
 
 /** Physical-plan audits: machine-checked versions of the `.explain`
   * inspections the scale posture rests on. A refactor that silently
@@ -37,6 +38,12 @@ class PlanAuditSpec extends SparkSpec {
 
   private def q(name: String): String =
     planOf(Registry.byName(name).fn(session, dir))
+
+  /** The pool AnnIndex.fold rewrites over the pristine q207/q212/q217
+    * index (base + three pending fragments). */
+  private def pendingFoldInput(): DataFrame =
+    AnnIndex.foldInput(session, AnnIndex.load(AnnIndex.dirFor(
+      graft.queries.EmbedOps.annIncTable(session, dir), "q")))._2
 
   /** Count shuffle exchanges. Explain indents operators with `+-`/`:-`
     * prefixes, so a startsWith("Exchange") only ever matches a root-level
@@ -376,15 +383,13 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q212 fold: input reads only affected base cells; serve prunes both layers") {
-    // the nightly fold's INPUT frame: the base scan must carry the
-    // affected-cell partition filter — untouched cells never read
-    val (idx, delta) = graft.queries.EmbedOps.annIncPaths(session, dir)
-    val foldPlan = planOf(
-      graft.queries.EmbedOps.annFoldInput(session, idx, delta))
+    // the nightly fold's INPUT: the pool AnnIndex.fold rewrites over
+    // an index with pending fragments — the base scan must carry the
+    // affected-cell partition filter; untouched cells never read
+    val foldPlan = planOf(pendingFoldInput())
     val baseScan = foldPlan.linesIterator.find(l =>
-      l.contains("FileScan parquet") && l.contains("vectors") &&
-        !l.contains("delta")).getOrElse(
-      fail(s"no base vector scan in the fold input plan:\n$foldPlan"))
+      l.contains("FileScan parquet") && l.contains("base/vectors"))
+      .getOrElse(fail(s"no base vector scan in the fold input plan:\n$foldPlan"))
     assert(baseScan.contains("PartitionFilters: [") &&
       baseScan.replaceAll(".*PartitionFilters: \\[", "")
         .takeWhile(_ != ']').contains("label"),
@@ -405,17 +410,18 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q217 LSM fold+retire: one-pass fold input reads only affected cells; post-retire serve prunes and broadcasts") {
-    // the MULTI-fragment fold input (over the pristine Scratch
-    // fragments): the base scan must carry the affected-cell
-    // partition filter — folding 3 fragments still never rescans
-    // untouched cells
-    val idx = graft.queries.EmbedOps.annIncPaths(session, dir)._1
-    val pristine = graft.queries.EmbedOps.annLsmFrags(session, dir)
-    val fragVecs = (0 to 2).map(k => s"$pristine/frag-$k/vectors")
-    val foldPlan = planOf(
-      graft.queries.EmbedOps.annLsmFoldInput(session, idx, fragVecs))
+    // the MULTI-fragment fold input (the pool AnnIndex.fold rewrites
+    // over the pristine index's three pending fragments): ONE pass
+    // reads all three, and the base scan carries the affected-cell
+    // partition filter — folding 3 fragments never rescans untouched
+    // cells
+    val foldPlan = planOf(pendingFoldInput())
+    val fragScans = foldPlan.linesIterator.count(l =>
+      l.contains("FileScan parquet") && l.contains("/frag-"))
+    assert(fragScans == 3,
+      s"the fold input must read the three fragments once each:\n$foldPlan")
     val baseScan = foldPlan.linesIterator.find(l =>
-      l.contains("FileScan parquet") && l.contains("ivf_index_inc"))
+      l.contains("FileScan parquet") && l.contains("base/vectors"))
       .getOrElse(fail(s"no base vector scan in the fold input:\n$foldPlan"))
     assert(baseScan.contains("PartitionFilters: [") &&
       baseScan.replaceAll(".*PartitionFilters: \\[", "")
@@ -437,20 +443,19 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q221 tombstone delete: masked pool prunes cells and broadcast-anti-joins the keys; post-compaction serve prunes") {
-    // the masked serve's pool shape over the pristine fixture: the
-    // base scan pruned to probed cells, the tombstone keys a
-    // BROADCAST anti-join (batch-sized by contract) — never a
-    // corpus-wide shuffle to apply a delete
-    val (idx, tomb) = graft.queries.EmbedOps.annTombPaths(session, dir)
-    val keys = session.read.parquet(s"$tomb/keys")
-    val somePool = session.read.parquet(s"$idx/vectors")
-      .filter(col("label").isin(0, 1))
-      .join(broadcast(keys), Seq("vec_id", "label"), "left_anti")
-    val mp = planOf(somePool)
+    // the pool AnnIndex resolves under a pending tombstone
+    // (resolvePool over the pristine q221 index): the base scan pruned
+    // to the requested cells, the tombstone keys a BROADCAST anti-join
+    // (batch-sized by contract) — never a corpus-wide shuffle to apply
+    // a delete
+    val tombIdx = AnnIndex.load(AnnIndex.dirFor(
+      graft.queries.EmbedOps.annTombTable(session, dir), "q"))
+    assert(tombIdx.tombs.nonEmpty, s"fixture must carry a pending tombstone: $tombIdx")
+    val mp = planOf(AnnIndex.resolvePool(session, tombIdx, Seq(0, 1)))
     assert(mp.contains("BroadcastHashJoin") && mp.contains("LeftAnti"),
       s"tombstone mask must be a broadcast anti-join:\n$mp")
     assert(mp.linesIterator.exists(l => l.contains("FileScan parquet") &&
-      l.contains("ivf_index_inc") &&
+      l.contains("base/vectors") &&
       l.replaceAll(".*PartitionFilters: \\[", "")
         .takeWhile(_ != ']').contains("label")),
       s"masked pool must prune probed cells:\n$mp")
@@ -607,18 +612,19 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q225 filtered LSM: every pool scan prunes on the filter key; probed cells via label") {
     val p = q("q225_filtered_ann_lsm")
-    // the src-partitioned layout must reach the scans: the untouched
-    // src-1 serve (and the src-0 cold-cell fallback) read base vectors
-    // with src AND label in PartitionFilters — maintenance in one src
-    // never widens another src's reads
-    val bothPruned = p.linesIterator.exists { l =>
-      l.contains("FileScan parquet") && {
-        val pf = l.replaceAll(".*PartitionFilters: \\[", "")
-          .takeWhile(_ != ']')
-        pf.contains("src") && pf.contains("label")
-      }
-    }
-    assert(bothPruned, s"no pool scan pruned on src AND label:\n$p")
+    // the filter key prunes by DIRECTORY: every index scan (pools of
+    // the untouched src-1 serve and the src-0 serves) resolves inside
+    // ONE sub-index tree, and pool scans prune probed cells via label
+    // — maintenance in one src never widens another src's reads
+    val idxScans = p.linesIterator.filter(l =>
+      l.contains("FileScan parquet") && l.contains("/_ann/")).toSeq
+    assert(idxScans.nonEmpty &&
+      idxScans.forall(l => "/_ann/q/src=\\d+/".r.findFirstIn(l).isDefined),
+      s"every index scan must stay inside one sub-index tree:\n$p")
+    assert(idxScans.exists(l =>
+      l.replaceAll(".*PartitionFilters: \\[", "").takeWhile(_ != ']')
+        .contains("label")),
+      s"no pool scan pruned probed cells via label:\n$p")
     assert(!p.contains("SortMergeJoin"),
       s"probe/mask joins must broadcast:\n$p")
     assert(!p.contains("SinglePartition"),
