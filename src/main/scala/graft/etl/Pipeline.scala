@@ -96,9 +96,12 @@ object Pipeline {
     "Atendimentos_DataEHora_Atendimento", "Atendimentos_DataEHora_Final",
     "Cancelamentos_DataDeCancelamento")
 
-  def parseDates(df: DataFrame, cols: Seq[String] = DateColumns): DataFrame =
-    cols.filter(df.columns.contains).foldLeft(df)((d, c) =>
-      d.withColumn(c, parseDate(col(c))))
+  def parseDates(df: DataFrame, cols: Seq[String] = DateColumns): DataFrame = {
+    // one projection, not one withColumn layer per date column
+    val present = cols.filter(df.columns.contains)
+    if (present.isEmpty) df
+    else df.withColumns(present.map(c => c -> parseDate(col(c))).toMap)
+  }
 
   /** The full derivation block (F8-F20 + F14-F17): null-ness flags, lead
     * time, late-cancel, no-show vs `asOf`, the status-consolidation

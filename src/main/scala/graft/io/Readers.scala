@@ -109,10 +109,11 @@ object Readers {
     * header doesn't match, and a numeric-sample validation gate (≥ half of
     * a bounded sample of Valor parses as BR-locale money). */
   def csvPriceTable(spark: SparkSession, path: String): DataFrame = {
-    val combos = for {
-      sep <- Seq(";", "\t", ",")
-      cs <- DefaultCharsets if decodes(path, cs)
-    } yield (sep, cs)
+    // the strict decode probe depends on the charset only: run it once
+    // per charset, not once per (separator, charset) pair
+    val charsets = DefaultCharsets.filter(decodes(path, _))
+    val combos = for (sep <- Seq(";", "\t", ","); cs <- charsets)
+      yield (sep, cs)
     combos.view.flatMap { case (sep, cs) =>
       Try {
         val raw = spark.read

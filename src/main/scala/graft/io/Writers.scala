@@ -19,16 +19,17 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
 object Writers {
 
   /** Render floating-point columns as 2-decimal, comma-decimal strings. */
-  def brDecimalProjection(df: DataFrame): DataFrame =
-    df.schema.fields.foldLeft(df) { (d, f) =>
-      f.dataType match {
-        case DoubleType | FloatType =>
-          d.withColumn(f.name,
-            when(col(f.name).isNotNull,
-              translate(format_string("%.2f", col(f.name)), ".", ",")))
-        case _ => d
-      }
+  def brDecimalProjection(df: DataFrame): DataFrame = {
+    // one projection for every floating-point column, not one withColumn
+    // layer per column; replaced columns keep their positions
+    val doubles = df.schema.fields.collect {
+      case f if f.dataType == DoubleType || f.dataType == FloatType => f.name
     }
+    if (doubles.isEmpty) df
+    else df.withColumns(doubles.map(c => c ->
+      when(col(c).isNotNull,
+        translate(format_string("%.2f", col(c)), ".", ","))).toMap)
+  }
 
   /** Date/key-partitioned parquet lake layout: the 100 TB posture for
     * every fact table (SURVEY §4) — a filter on the partition column

@@ -33,11 +33,65 @@ object EmbedOps {
     transform(c, x => round(x.cast("double") * 1000).cast("long"))
 
   /** Exact integer squared norm (native dot with itself). The vector
-    * math (dotL, cosine, cellDist, withCentNorm, centroidTable) has
-    * ONE definition, in [[AnnIndex]]: a precision or codegen tweak
+    * math (dotL, cosine, cellDist, withCentNorm, centroidTable) and the
+    * search steps built on it — the exact cosine rerank
+    * ([[AnnIndex.rerank]]) and the IVF probe ([[AnnIndex.probeCells]]
+    * in-plan, [[AnnIndex.probePairs]] probe-once) — have ONE
+    * definition, in [[AnnIndex]]: a precision, codegen or plan tweak
     * there must reach the gate path and the index serve path together
     * (review r18). */
   private def norm2(v: Column): Column = AnnIndex.dotL(v, v)
+
+  /** Exact brute-force top-k: every corpus row but the query itself,
+    * ranked by [[AnnIndex.rerank]] — the baseline every ANN gate is
+    * graded against. The bounded query set (qid, qv, qn) broadcasts
+    * against one linear corpus scan. */
+  private def exactTopK(corpus: DataFrame, qs: DataFrame, k: Int): DataFrame =
+    AnnIndex.rerank(corpus.join(broadcast(qs), col("vec_id") =!= col("qid")), k)
+
+  /** IVF search output: (query_id, rnk, neighbor_id, cell, cosine). */
+  private def annRows(ranked: DataFrame, cell: Column): DataFrame =
+    ranked.select(col("qid").as("query_id"), col("rnk"),
+      col("vec_id").as("neighbor_id"), cell.as("cell"),
+      round(col("cos"), 6).as("cosine"))
+
+  /** Integer centroids (label, sv, c) over EVERY embedding — zero-norm
+    * vectors included, the rows the q33/q113 oracles' `cnt` counts. */
+  private def embedCentroids(s: SparkSession, dir: String): DataFrame =
+    AnnIndex.centroidTable(Tables.embeddings(s, dir)
+      .select(col("label"), quant(col("embedding")).as("q")))
+
+  /** Lloyd assign, map-only: each row of `v` (q, qn = ||q||²) to its
+    * nearest centroid of `cent` (k, c). All centroids ride along as ONE
+    * broadcast array row; the per-row argmin is array_min over (d, k)
+    * structs — deterministic ties to the lowest k, zero shuffle. The
+    * distance is ||q||² - 2q·c + ||c||² with the dot NATIVE
+    * (DotProduct) and ||c||² computed once per centroid — the
+    * interpreted aggregate(zip_with(...)) form is the known hot-loop
+    * pathology. Returns v's columns plus k and d. */
+  private def lloydAssign(v: DataFrame, cent: DataFrame): DataFrame = {
+    val cs = cent.withColumn("cn", norm2(col("c")))
+      .agg(collect_list(struct(col("k"), col("c"), col("cn"))).as("cs"))
+    val best = array_min(transform(col("cs"), e =>
+      struct((col("qn") - lit(2L) * AnnIndex.dotL(col("q"), e.getField("c")) +
+        e.getField("cn")).as("d"), e.getField("k").as("k"))))
+    v.crossJoin(broadcast(cs)).select(v.columns.map(col) :+
+      best.getField("k").as("k") :+ best.getField("d").as("d"): _*)
+  }
+
+  /** Lloyd update: one hash-agg on (k, dim), c = floor(sum/count) per
+    * element. Floor division stays in PURE LONG arithmetic (subtract the
+    * positive modulus, then exact `div`) — a double division would round
+    * once a per-dimension sum passes 2^53, which a 100 TB partition can
+    * reach. The oracles mirror it with (sx - ((sx % cnt + cnt) % cnt)) // cnt. */
+  private def lloydUpdate(assigned: DataFrame): DataFrame =
+    assigned.select(col("k"), posexplode(col("q")).as(Seq("i", "x")))
+      .groupBy(col("k"), col("i"))
+      .agg(sum(col("x")).as("sx"), count(lit(1)).as("cnt"))
+      .withColumn("ci", expr("(sx - pmod(sx, cnt)) div cnt"))
+      .groupBy(col("k"))
+      .agg(transform(array_sort(collect_list(struct(col("i"), col("ci")))),
+        e => e.getField("ci")).as("c"))
 
   /** Sign code for one 32-dim half of a quantized vector `q`: a fold
     * acc*2 + (x>0) — the first element lands on the word's high bit,
@@ -173,14 +227,7 @@ object EmbedOps {
       val corpus = quantized(s, dir)
       val qs = corpus.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn"))
-      val pairs = corpus.join(broadcast(qs), col("vec_id") =!= col("qid"))
-        .withColumn("cos",
-          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
-            col("qn"), col("nn")))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      pairs.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
+      exactTopK(corpus, qs, 5)
         .select(col("qid").as("query_id"), col("rnk"),
           col("vec_id").as("neighbor_id"), round(col("cos"), 6).as("cosine"))
         .orderBy("query_id", "rnk")
@@ -221,40 +268,14 @@ object EmbedOps {
                ROUND(cos, 6) AS cosine
         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")) { (s, dir) =>
       val corpus = quantized(s, dir)
-      // integer centroids: elementwise sums via posexplode + reassemble
-      val cellsum = Tables.embeddings(s, dir)
-        .select(col("label"), posexplode(quant(col("embedding"))).as(Seq("i", "x")))
-        .groupBy(col("label"), col("i"))
-        .agg(sum(col("x")).as("s"))
-      val cent = cellsum.groupBy(col("label"))
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("s")))),
-          e => e.getField("s")).as("sv"))
-      val cnt = Tables.embeddings(s, dir).groupBy(col("label"))
-        .agg(count(lit(1)).as("c"))
-      val centroids = cent.join(cnt, "label") // 1 row per cell — tiny
       val qs = corpus.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn"))
-      // count-normalized distance to every centroid mean: ||q - sv/c||²
-      val dist = qs.crossJoin(broadcast(AnnIndex.withCentNorm(centroids)))
-        .withColumn("d", AnnIndex.cellDist(col("qv"), col("sv"), col("c"),
-          col("qn"), col("sn")))
-      val wp = Window.partitionBy(col("qid")).orderBy(col("d").asc, col("label").asc)
-      val probe = dist.withColumn("pr", row_number().over(wp))
-        .filter(col("pr") <= 3)
-        .select(col("qid"), col("label"), col("qv"), col("qn"))
-      // search only the probed cells (broadcast the tiny probe plan)
-      val cand = corpus.join(broadcast(probe),
-          corpus("label") === probe("label") && col("vec_id") =!= col("qid"))
-        .withColumn("cos",
-          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
-            col("qn"), col("nn")))
-      val wr = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      cand.withColumn("rnk", row_number().over(wr))
-        .filter(col("rnk") <= 3)
-        .select(col("qid").as("query_id"), col("rnk"),
-          col("vec_id").as("neighbor_id"), corpus("label").as("cell"),
-          round(col("cos"), 6).as("cosine"))
+      // the index is derived inside the query, so the probe stays
+      // in-plan; search only the probed cells (broadcast probe plan)
+      val probe = AnnIndex.probeCells(qs, embedCentroids(s, dir), 3)
+      annRows(AnnIndex.rerank(corpus.join(broadcast(probe),
+          corpus("label") === probe("label") && col("vec_id") =!= col("qid")),
+          3), corpus("label"))
         .orderBy("query_id", "rnk")
     },
 
@@ -309,53 +330,28 @@ object EmbedOps {
         SELECT query_id, rnk::INT AS rnk, neighbor_id, label AS cell,
                ROUND(cos, 6) AS cosine
         FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""")) { (s, dir) =>
-      val idx = graft.core.Scratch.materialize("ivf_index", s"v2|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
+      val idx = graft.core.Scratch.materialize("ivf_index", s"v3|$dir|${graft.core.Scratch.sourceSignature(dir)}") { p =>
         // build job: exact integer centroids (q33's derivation) + the
         // corpus laid out as one directory per cell with norms baked in
-        val cellsum = Tables.embeddings(s, dir)
-          .select(col("label"), posexplode(quant(col("embedding"))).as(Seq("i", "x")))
-          .groupBy(col("label"), col("i"))
-          .agg(sum(col("x")).as("s"))
-        val cent = cellsum.groupBy(col("label"))
-          .agg(transform(array_sort(collect_list(struct(col("i"), col("s")))),
-            e => e.getField("s")).as("sv"))
-        val cnt = Tables.embeddings(s, dir).groupBy(col("label"))
-          .agg(count(lit(1)).as("c"))
-        cent.join(cnt, "label").write.mode("overwrite")
+        embedCentroids(s, dir).write.mode("overwrite")
           .parquet(java.nio.file.Paths.get(p, "centroids").toString)
         AnnIndex.clusterForWrite(quantized(s, dir), "label")
           .write.mode("overwrite").partitionBy("label")
           .parquet(java.nio.file.Paths.get(p, "vectors").toString)
       }
       // ---- serve path: everything below reads only standing state
-      val centroids = s.read.parquet(s"$idx/centroids")
       val qs = quantized(s, dir)
         .filter(col("vec_id") >= 5 && col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn"))
-      val dist = qs.crossJoin(broadcast(AnnIndex.withCentNorm(centroids)))
-        .withColumn("d", AnnIndex.cellDist(col("qv"), col("sv"), col("c"),
-          col("qn"), col("sn")))
-      val wp = Window.partitionBy(col("qid")).orderBy(col("d").asc, col("label").asc)
-      val probe = dist.withColumn("pr", row_number().over(wp))
-        .filter(col("pr") <= 3)
-        .select(col("qid"), col("label"), col("qv"), col("qn"))
-      // the inverted-list seek: probed cell ids → literal IN-filter →
-      // only those label= directories are scanned
-      val cells = probe.select("label").distinct().collect().map(_.get(0))
+      // probe ONCE; the inverted-list seek: probed cell ids → literal
+      // IN-filter → only those label= directories are scanned
+      val (cells, probe) = AnnIndex.probePairs(s, qs,
+        s.read.parquet(s"$idx/centroids"), 3)
       val stored = s.read.parquet(s"$idx/vectors")
         .filter(col("label").isin(cells: _*))
-      val cand = stored.join(broadcast(probe),
-          stored("label") === probe("label") && col("vec_id") =!= col("qid"))
-        .withColumn("cos",
-          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
-            col("qn"), col("nn")))
-      val wr = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      cand.withColumn("rnk", row_number().over(wr))
-        .filter(col("rnk") <= 3)
-        .select(col("qid").as("query_id"), col("rnk"),
-          col("vec_id").as("neighbor_id"), stored("label").as("cell"),
-          round(col("cos"), 6).as("cosine"))
+      annRows(AnnIndex.rerank(stored.join(broadcast(probe),
+          stored("label") === probe("label") && col("vec_id") =!= col("qid")),
+          3), stored("label"))
         .orderBy("query_id", "rnk")
     },
 
@@ -485,42 +481,11 @@ object EmbedOps {
       val v = Tables.embeddings(s, dir)
         .select(col("vec_id"), quant(col("embedding")).as("q"))
         .withColumn("qn", norm2(col("q")))
-      // map-only assignment: ALL centroids ride along as one broadcast
-      // array row; per-vec argmin is array_min over (d, k) structs —
-      // deterministic ties to the lowest k, zero shuffle. The distance
-      // is ||q||² - 2q·c + ||c||² with both dots NATIVE (DotProduct) and
-      // ||c||² precomputed per centroid — the interpreted
-      // aggregate(zip_with(...)) form is the known hot-loop pathology
-      // (see the dotL note at the top of this file).
-      def assign(cent: org.apache.spark.sql.DataFrame) = {
-        val centArr = cent.withColumn("cn", norm2(col("c")))
-          .agg(collect_list(struct(col("k"), col("c"), col("cn"))).as("cs"))
-        v.crossJoin(broadcast(centArr))
-          .withColumn("best", array_min(transform(col("cs"), e =>
-            struct((col("qn") - lit(2L) *
-                AnnIndex.dotL(col("q"), e.getField("c")) +
-              e.getField("cn")).as("d"),
-              e.getField("k").as("k")))))
-          .select(col("vec_id"), col("q"),
-            col("best").getField("k").as("k"), col("best").getField("d").as("d"))
-      }
-      // centroid update: one hash-agg on (cluster, dim), floor(sum/count).
-      // Floor division stays in PURE LONG arithmetic (subtract the positive
-      // modulus, then exact `div`) — a double division would round once a
-      // per-dimension sum passes 2^53, which a 100 TB partition can reach.
-      // The oracle mirrors it with (sx - ((sx % cnt + cnt) % cnt)) // cnt.
-      def update(assigned: org.apache.spark.sql.DataFrame) =
-        assigned.select(col("k"), posexplode(col("q")).as(Seq("i", "x")))
-          .groupBy(col("k"), col("i"))
-          .agg(sum(col("x")).as("sx"), count(lit(1)).as("cnt"))
-          .withColumn("ci", expr("(sx - pmod(sx, cnt)) div cnt"))
-          .groupBy(col("k"))
-          .agg(transform(array_sort(collect_list(struct(col("i"), col("ci")))),
-            e => e.getField("ci")).as("c"))
       val c0 = v.filter(col("vec_id") < 8)
         .select(col("vec_id").cast("int").as("k"), col("q").as("c"))
-      val a3 = assign(update(assign(update(assign(c0)))))
-      a3.groupBy(col("k").as("cluster"))
+      def step(cent: DataFrame) = lloydUpdate(lloydAssign(v, cent))
+      lloydAssign(v, step(step(c0)))
+        .groupBy(col("k").as("cluster"))
         .agg(count(lit(1)).as("n_vecs"), sum(col("d")).as("total_sqdist"),
           min(col("vec_id")).as("min_vec"))
         .orderBy("cluster")
@@ -619,29 +584,9 @@ object EmbedOps {
       def codes(off: Int) = {
         val vj = v.select(col("vec_id"), slice(col("qf"), off, SUB).as("q"))
           .withColumn("qn", norm2(col("q")))
-        def assign(cent: DataFrame) = {
-          val centArr = cent.withColumn("cn", norm2(col("c")))
-            .agg(collect_list(struct(col("k"), col("c"), col("cn"))).as("cs"))
-          vj.crossJoin(broadcast(centArr))
-            .withColumn("best", array_min(transform(col("cs"), e =>
-              struct((col("qn") - lit(2L) *
-                  AnnIndex.dotL(col("q"), e.getField("c")) +
-                e.getField("cn")).as("d"),
-                e.getField("k").as("k")))))
-            .select(col("vec_id"), col("q"),
-              col("best").getField("k").as("k"), col("best").getField("d").as("d"))
-        }
-        def update(assigned: DataFrame) =
-          assigned.select(col("k"), posexplode(col("q")).as(Seq("i", "x")))
-            .groupBy(col("k"), col("i"))
-            .agg(sum(col("x")).as("sx"), count(lit(1)).as("cnt"))
-            .withColumn("ci", expr("(sx - pmod(sx, cnt)) div cnt"))
-            .groupBy(col("k"))
-            .agg(transform(array_sort(collect_list(struct(col("i"), col("ci")))),
-              e => e.getField("ci")).as("c"))
         val init = vj.filter(col("vec_id") < 4)
           .select(col("vec_id").cast("int").as("k"), col("q").as("c"))
-        assign(update(assign(init)))
+        lloydAssign(vj, lloydUpdate(lloydAssign(vj, init)))
       }
       codes(1).select(col("vec_id"), col("k").as("c0"), col("d").as("d0"))
         .join(codes(33).select(col("vec_id").as("vb"),
@@ -694,26 +639,19 @@ object EmbedOps {
                    END)::BIGINT AS kept_id_sum
         FROM a LEFT JOIN drops dr ON a.vec_id = dr.vec_id
         GROUP BY 1 ORDER BY 1""")) { (s, dir) =>
-      val nz = quantized(s, dir).drop("label")
-      val seedArr = nz.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("k"), col("q").as("c"),
-          col("nn").as("cn"))
-        .agg(collect_list(struct(col("k"), col("c"), col("cn"))).as("cs"))
-      // map-only assignment: 8 seed centroids broadcast as one array
-      // row, per-vector argmin with ties to the lowest k — no shuffle
-      val a = nz.crossJoin(broadcast(seedArr))
-        .withColumn("best", array_min(transform(col("cs"), e =>
-          struct((col("nn") - lit(2L) * AnnIndex.dotL(col("q"), e.getField("c")) +
-            e.getField("cn")).as("d"), e.getField("k").as("k")))))
-        .select(col("vec_id"), col("q"), col("nn"),
-          col("best").getField("k").as("k"))
+      val nz = quantized(s, dir)
+        .select(col("vec_id"), col("q"), col("nn").as("qn"))
+      // map-only assignment to the 8 seed centroids (q70's assign)
+      val a = lloydAssign(nz, nz.filter(col("vec_id") < 8)
+          .select(col("vec_id").cast("int").as("k"), col("q").as("c")))
+        .drop("d")
         // one shuffle on the cluster id; both join sides and the final
         // aggregate reuse this clustering
         .repartition(col("k"))
       val xa = a.select(col("k"), col("vec_id").as("ia"),
-        col("q").as("qa"), col("nn").as("na"))
+        col("q").as("qa"), col("qn").as("na"))
       val xb = a.select(col("k"), col("vec_id").as("ib"),
-        col("q").as("qb"), col("nn").as("nb"))
+        col("q").as("qb"), col("qn").as("nb"))
       val drops = xa.join(xb, "k").filter(col("ia") < col("ib"))
         .filter(AnnIndex.cosine(AnnIndex.dotL(col("qa"), col("qb")),
           col("na"), col("nb")) >= 0.4)
@@ -773,20 +711,11 @@ object EmbedOps {
           ON f.qid = h.qid AND f.neighbor_id = h.neighbor_id
         GROUP BY 1 ORDER BY 1""")) { (s, dir) =>
       val half = DIM / 2
-      def topk(corpus: DataFrame): DataFrame = {
-        val qs = corpus.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("q").as("qv"),
-            col("nn").as("qn"))
-        val w = Window.partitionBy(col("qid"))
-          .orderBy(col("cos").desc, col("vec_id").asc)
-        corpus.join(broadcast(qs), col("vec_id") =!= col("qid"))
-          .withColumn("cos",
-            AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
-              col("qn"), col("nn")))
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 5)
+      def topk(corpus: DataFrame): DataFrame =
+        exactTopK(corpus, corpus.filter(col("vec_id") < 10)
+            .select(col("vec_id").as("qid"), col("q").as("qv"),
+              col("nn").as("qn")), 5)
           .select(col("qid"), col("vec_id").as("neighbor_id"))
-      }
       val full = quantized(s, dir)
       // derived from the SAME quantized frame (quant is element-wise,
       // so slice-then-quant == quant-then-slice): one common subtree
@@ -867,15 +796,7 @@ object EmbedOps {
         .select(col("vec_id").as("qid"), col("q").as("qv"),
           col("nn").as("qn"), col("clo").as("qlo"), col("chi").as("qhi"))
       // exact-cosine baseline (the q32/q187 machinery)
-      val wCos = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      val exact = full
-        .join(broadcast(qs.drop("qlo", "qhi")), col("vec_id") =!= col("qid"))
-        .withColumn("cos",
-          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
-            col("qn"), col("nn")))
-        .withColumn("rnk", row_number().over(wCos))
-        .filter(col("rnk") <= 5)
+      val exact = exactTopK(full, qs.drop("qlo", "qhi"), 5)
         .select(col("qid"), col("vec_id").as("neighbor_id"))
       // Hamming tier: two POPCNT(xor) per candidate, integer order
       val wHam = Window.partitionBy(col("qid"))
@@ -986,30 +907,15 @@ object EmbedOps {
         .select(col("qid"), col("vec_id").as("neighbor_id"))
       // stage 2: fetch ONLY the candidates' vectors (broadcast the
       // bounded id set — the point-lookup tier) and re-score exactly
-      val wRe = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("neighbor_id").asc)
-      val rtop = full.join(broadcast(cand),
+      val rtop = AnnIndex.rerank(full.join(broadcast(cand),
           full("vec_id") === cand("neighbor_id"))
-        .join(broadcast(qs.drop("qlo", "qhi")), Seq("qid"))
-        .withColumn("cos",
-          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
-            col("qn"), col("nn")))
-        .withColumn("rnk", row_number().over(wRe))
-        .filter(col("rnk") <= 5)
+        .join(broadcast(qs.drop("qlo", "qhi")), Seq("qid")), 5)
         .select(col("qid"), col("neighbor_id"), col("rnk"))
       val top1 = rtop.filter(col("rnk") === 1)
         .select(col("qid").as("tqid"), col("neighbor_id").as("reranked_top1"))
       // audit tier: the full exact scan is the BASELINE being compared
       // against, not the serving path
-      val wCos = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      val exact = full
-        .join(broadcast(qs.drop("qlo", "qhi")), col("vec_id") =!= col("qid"))
-        .withColumn("cos",
-          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
-            col("qn"), col("nn")))
-        .withColumn("rnk", row_number().over(wCos))
-        .filter(col("rnk") <= 5)
+      val exact = exactTopK(full, qs.drop("qlo", "qhi"), 5)
         .select(col("qid"), col("vec_id").as("neighbor_id"))
       exact.as("f")
         .join(broadcast(rtop.as("r5")), // 5 x |queries| rows — tiny
@@ -1078,13 +984,7 @@ object EmbedOps {
       val scored = full
         .join(broadcast(qs), col("vec_id") =!= col("qid"))
         .withColumn("dot", AnnIndex.dotL(col("qv"), col("q")))
-        .withColumn("cos", AnnIndex.cosine(col("dot"), col("qn"), col("nn")))
-        .select("qid", "qlab", "vec_id", "label", "dot", "cos")
-      val wNeg = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      val neg = scored.filter(col("label") =!= col("qlab"))
-        .withColumn("rnk", row_number().over(wNeg))
-        .filter(col("rnk") <= 3)
+      val neg = AnnIndex.rerank(scored.filter(col("label") =!= col("qlab")), 3)
         .select(col("qid"), col("rnk"), col("vec_id").as("neighbor_id"),
           col("dot").as("neg_dot"))
       val pos = scored.filter(col("label") === col("qlab"))
@@ -1233,25 +1133,17 @@ object EmbedOps {
           .write.partitionBy("src", "label")
           .parquet(java.nio.file.Paths.get(p, "vectors").toString)
       }
-      val cents = s.read.parquet(s"$idx/centroids")
       val qs = s.read.parquet(s"$idx/vectors")
         .filter(col("vec_id") >= 5 && col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("q").as("qv"),
           col("nn").as("qn"),
           pmod(col("vec_id") + 1, lit(3)).as("filt"))
-      val dist = qs.crossJoin(broadcast(AnnIndex.withCentNorm(cents)))
-        .withColumn("d", AnnIndex.cellDist(col("qv"), col("sv"), col("c"),
-          col("qn"), col("sn")))
-      val wp = Window.partitionBy(col("qid"))
-        .orderBy(col("d").asc, col("label").asc)
-      val probe = dist.withColumn("pr", row_number().over(wp))
-        .filter(col("pr") <= 3)
-        .select(col("qid"), col("label"), col("qv"), col("qn"),
-          col("filt"))
-      // bounded driver move: nprobe x |queries| cell ids + <= 3 srcs
-      val pd = probe.select("filt", "label").distinct().collect()
-      val srcs = pd.map(_.get(0)).distinct.toSeq
-      val cells = pd.map(_.get(1)).distinct.toSeq
+      // probe ONCE (the probe frame carries each query's filt); bounded
+      // driver move: nprobe x |queries| cell ids + <= 3 srcs, the srcs
+      // read off the rebuilt probe frame (a local join, no re-probe)
+      val (cells, probe) = AnnIndex.probePairs(s, qs,
+        s.read.parquet(s"$idx/centroids"), 3)
+      val srcs = probe.select("filt").distinct().collect().map(_.get(0)).toSeq
       // PRE-filter: src prunes partitions BEFORE label — candidates
       // never include out-of-filter vectors, so top-k is computed on
       // the filtered slice (post-filtering would silently lose
@@ -1259,33 +1151,16 @@ object EmbedOps {
       val pool = s.read.parquet(s"$idx/vectors")
         .filter(col("src").isin(srcs: _*) &&
           col("label").isin(cells: _*))
-      val cand = pool.join(broadcast(probe),
+      val ann = annRows(AnnIndex.rerank(pool.join(broadcast(probe),
           pool("label") === probe("label") &&
             pool("src") === probe("filt") &&
-            col("vec_id") =!= col("qid"))
-        .withColumn("cos",
-          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
-            col("qn"), col("nn")))
-      val wr = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      val ann = cand.withColumn("rnk", row_number().over(wr))
-        .filter(col("rnk") <= 3)
-        .select(col("qid").as("query_id"), col("rnk"),
-          col("vec_id").as("neighbor_id"), pool("label").as("cell"),
-          round(col("cos"), 6).as("cosine"))
+            col("vec_id") =!= col("qid")), 3), pool("label"))
       // exact brute-force over the SAME filtered slice (src-pruned
       // scan, no label filter) — the recall audit's ground truth
       val exPool = s.read.parquet(s"$idx/vectors")
         .filter(col("src").isin(srcs: _*))
-      val ex = exPool.join(broadcast(qs),
-          exPool("src") === qs("filt") && col("vec_id") =!= col("qid"))
-        .withColumn("ecos",
-          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
-            col("qn"), col("nn")))
-        .withColumn("ernk", row_number().over(Window
-          .partitionBy(col("qid"))
-          .orderBy(col("ecos").desc, col("vec_id").asc)))
-        .filter(col("ernk") <= 3)
+      val ex = AnnIndex.rerank(exPool.join(broadcast(qs),
+          exPool("src") === qs("filt") && col("vec_id") =!= col("qid")), 3)
         .select(col("qid").as("equery_id"),
           col("vec_id").as("eneighbor_id"))
       val rec = ann.join(broadcast(ex),
@@ -1599,29 +1474,13 @@ object EmbedOps {
       // probe ONCE per centroid table (r19 probePairs shape): the
       // rank3/recall jobs used to re-execute the probe subtree
       // building their broadcasts
-      def probeOf(cents: DataFrame): (Seq[Any], DataFrame) = {
-        val (cells, probe) =
-          AnnIndex.probePairs(s, qs, cents, 2)
-        (cells.map(c => c: Any), probe)
-      }
-      val wr = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      def rank3(pool: DataFrame, probe: DataFrame): DataFrame = pool
-        .join(broadcast(probe),
-          pool("label") === probe("label") && col("vec_id") =!= col("qid"))
-        .withColumn("cos",
-          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
-            col("qn"), col("nn")))
-        .withColumn("rnk", row_number().over(wr))
-        .filter(col("rnk") <= 3)
+      def probeOf(cents: DataFrame) = AnnIndex.probePairs(s, qs, cents, 2)
+      def rank3(pool: DataFrame, probe: DataFrame): DataFrame =
+        AnnIndex.rerank(pool.join(broadcast(probe),
+          pool("label") === probe("label") && col("vec_id") =!= col("qid")), 3)
       // exact ground truth over the filtered slice (src-pruned scan)
       val slice = s.read.parquet(s"$idx/vectors").filter(col("src") === 0)
-      val ex3 = slice.join(broadcast(qs), col("vec_id") =!= col("qid"))
-        .withColumn("cos",
-          AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
-            col("qn"), col("nn")))
-        .withColumn("ernk", row_number().over(wr))
-        .filter(col("ernk") <= 3)
+      val ex3 = exactTopK(slice, qs, 3)
         .select(col("qid").as("eqid"), col("vec_id").as("enid"))
       def recallOf(top3: DataFrame, name: String): DataFrame =
         ex3.join(broadcast(top3
@@ -1641,10 +1500,7 @@ object EmbedOps {
       val sPool = slice.filter(col("label").isin(sCellIds: _*))
       val s3 = rank3(sPool, scells)
       val sRec = recallOf(s3, "recall_slice")
-      val out = s3
-        .select(col("qid").as("query_id"), col("rnk"),
-          col("vec_id").as("neighbor_id"), sPool("label").as("cell"),
-          round(col("cos"), 6).as("cosine"))
+      val out = annRows(s3, sPool("label"))
         .join(broadcast(sRec), col("query_id") === col("recall_slice_qid"))
         .join(broadcast(gRec), col("query_id") === col("recall_global_qid"))
         .select(col("query_id"), col("rnk"), col("neighbor_id"),
@@ -2646,14 +2502,8 @@ object EmbedOps {
       val qs = nz.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("q").as("qv"),
           col("nn").as("qn"))
-      val vec = nz.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("c", AnnIndex.cosine(AnnIndex.dotL(col("qv"), col("q")),
-          col("qn"), col("nn")))
-        .withColumn("rv", row_number().over(Window.partitionBy(col("qid"))
-          .orderBy(col("c").desc, col("vec_id").asc)))
-        .filter(col("rv") <= 20)
-        .select(col("qid"), col("vec_id").as("doc_id"), col("rv"))
+      val vec = exactTopK(nz, qs, 20)
+        .select(col("qid"), col("vec_id").as("doc_id"), col("rnk").as("rv"))
       // ---- RRF over the union of the two top-20 lists
       val fused = lex.join(vec, Seq("qid", "doc_id"), "full_outer")
         .withColumn("s",

@@ -2,7 +2,7 @@ package graft.reports
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.queries.H.{cnt, pct}
+import graft.queries.H.{cnt, moneySum, pct}
 
 /** The reference's nine BI aggregate tables (A1-A10,
   * /root/reference/src/etl_pipeline.py:464-688) as reusable
@@ -80,8 +80,7 @@ object Reports {
         round(centsIf(col("Status_Consolidado") === "NO-SHOW").cast("double") / 100, 2)
           .as("Receita_Perdida_No_Show"),
         round(centsIf(isCancel).cast("double") / 100, 2).as("Receita_Perdida_Cancelamento"),
-        round(sum(round(col("Valor") * 100).cast("long")).cast("double") / 100, 2)
-          .as("Receita_Potencial"),
+        moneySum(col("Valor")).as("Receita_Potencial"),
         centsIf(col("Status_Consolidado") === "ATENDIDO").as("_c"))
       .withColumn("Ticket_Medio",
         when(col("Atendimentos") > 0,
@@ -183,8 +182,7 @@ object Reports {
         count(lit(1)).as("Agendamentos"),
         cnt(col("Status_Consolidado") === "ATENDIDO").as("Atendimentos"),
         cnt(col("Status_Consolidado") === "NO-SHOW").as("No_Shows"),
-        round(sum(round(col("Valor") * 100).cast("long")).cast("double") / 100, 2)
-          .as("Receita"),
+        moneySum(col("Valor")).as("Receita"),
         first(col("Horarios_Disponiveis")).as("Horarios_Disponiveis"))
       .withColumn("Taxa_Realizacao", pct(col("Atendimentos"), col("Agendamentos")))
       .withColumn("Taxa_Ocupacao",

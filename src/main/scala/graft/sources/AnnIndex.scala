@@ -194,28 +194,38 @@ object AnnIndex {
       .select(col("qid"), col("label"), col("qv"), col("qn"))
   }
 
+  /** Exact cosine of each candidate pair: query (qv, qn) x row (q, nn). */
+  private def withCos(cand: DataFrame): DataFrame =
+    cand.withColumn("cos",
+      cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
+
+  /** The rerank order: cosine descending, ties by the lower vec_id. */
+  private def byCos(keys: String*) = Window.partitionBy(keys.map(col): _*)
+    .orderBy(col("cos").desc, col("vec_id").asc)
+
+  /** Exact cosine rerank — ONE definition for the index serve and every
+    * gate that ranks candidates exactly. `cand` pairs a query (qid, qv,
+    * qn) with a candidate row (vec_id, q, nn); adds `cos` and `rnk` (per
+    * qid, [[byCos]] order) and keeps rnk <= k. */
+  private[graft] def rerank(cand: DataFrame, k: Int): DataFrame =
+    withCos(cand).withColumn("rnk", row_number().over(byCos("qid")))
+      .filter(col("rnk") <= k)
+
   /** Serve tail shared with the gate suite: exact cosine rerank inside
     * the probed pool, top-k overall PLUS each query's best NEW
     * neighbor at its overall rank — the upserted-vectors-are-
     * searchable proof even when arrivals don't crack the top-k. */
-  def topKWithBestNew(pool: DataFrame, probe: DataFrame, k: Int): DataFrame = {
-    val cand = pool.join(broadcast(probe),
-        pool("label") === probe("label") && col("vec_id") =!= col("qid"))
-      .withColumn("cos",
-        cosine(dotL(col("qv"), col("q")), col("qn"), col("nn")))
-    val wr = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val wn = Window.partitionBy(col("qid"), col("is_new"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    cand.withColumn("rnk", row_number().over(wr))
-      .withColumn("nrnk",
-        when(col("is_new"), row_number().over(wn)).otherwise(lit(null)))
+  def topKWithBestNew(pool: DataFrame, probe: DataFrame, k: Int): DataFrame =
+    withCos(pool.join(broadcast(probe),
+        pool("label") === probe("label") && col("vec_id") =!= col("qid")))
+      .withColumn("rnk", row_number().over(byCos("qid")))
+      .withColumn("nrnk", when(col("is_new"),
+        row_number().over(byCos("qid", "is_new"))).otherwise(lit(null)))
       .filter(col("rnk") <= k || col("nrnk") === 1)
       .select(col("qid").as("query_id"), col("rnk"),
         col("vec_id").as("neighbor_id"), pool("label").as("cell"),
         col("is_new"), round(col("cos"), 6).as("cosine"))
       .orderBy("query_id", "rnk")
-  }
 
   // ------------------------------------------------------------------
   // manifest — `<kind>,<path>` lines, atomic-rename publish, retained
@@ -1211,9 +1221,10 @@ object AnnIndex {
     * local join instead of re-executing the whole probe subtree
     * (centroid fold + crossJoin + window) behind its broadcast. The
     * r19 serveOne fix, factored out so the gate-local serves
-    * (EmbedOps q214/q218/q224) share it — r22 phase attribution showed
-    * each of their serves still paying the probe twice (once for the
-    * cells collect, once rebuilding the broadcast). */
+    * (EmbedOps q113/q213/q214/q218/q224) share it — r22 phase
+    * attribution showed each of their serves still paying the probe
+    * twice (once for the cells collect, once rebuilding the broadcast).
+    * The probe frame keeps every `qs` column (q213's filter key). */
   private[graft] def probePairs(s: SparkSession, qs: DataFrame,
       cents: DataFrame, nprobe: Int): (Seq[Long], DataFrame) = {
     // getAs[Number]: qid's type is the CALLER's (an Int qid worked
@@ -1228,10 +1239,7 @@ object AnnIndex {
         "serve; split the batch (or serve it distributed)")
     val cells = pairs.map(_._2).distinct.toSeq
     import s.implicits._
-    val probe = qs.join(
-        broadcast(pairs.toSeq.toDF("qid", "label")), Seq("qid"))
-      .select(col("qid"), col("label"), col("qv"), col("qn"))
-    (cells, probe)
+    (cells, qs.join(broadcast(pairs.toSeq.toDF("qid", "label")), Seq("qid")))
   }
 
   /** One (sub-)index's serve against a resolved root. */
@@ -1268,7 +1276,8 @@ object AnnIndex {
       // serveToTable (deferred feature work, r20 item 5 — the r21
       // persist() experiment showed a cached probe frame LOSES to
       // this collect at every gate).
-      val (cells, probe) = probePairs(s, qs, serveCentroids(s, L), nprobe)
+      val (cells, probe) = probePairs(s, qs.select("qid", "qv", "qn"),
+        serveCentroids(s, L), nprobe)
       topKWithBestNew(resolvePool(s, L, cells.map(c => c: Any)), probe, k)
     }
   }

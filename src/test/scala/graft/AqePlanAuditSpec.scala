@@ -129,6 +129,19 @@ class AqePlanAuditSpec extends SparkSpec {
       s"expected exactly one live gram explode, got $liveExplodes:\n$p")
   }
 
+  test("q113/q213 ANN serves probe ONCE: no probe crossJoin behind the top-k broadcast") {
+    // AnnIndex.probePairs collects the probed (qid, cell) pairs once and
+    // rebuilds the probe frame as qs ⨝ broadcast(pairs) — a hash join.
+    // A serve that re-executes its probe to build the top-k broadcast
+    // carries the query x centroid crossJoin into the final plan.
+    for (name <- Seq("q113_ann_index_serve", "q213_filtered_ann")) {
+      val p = finalPlan(name)
+      assert(!p.contains("BroadcastNestedLoopJoin") &&
+        !p.contains("CartesianProduct"),
+        s"$name re-executes its probe crossJoin behind the top-k:\n$p")
+    }
+  }
+
   test("runtime bloom filter injects on a fact-fact shuffle join when thresholds allow") {
     // The 100 TB lever the engine inherits from Catalyst: a selective
     // filter on one shuffle-join side injects might_contain(bloom) into
