@@ -86,8 +86,27 @@ object Pipeline {
     "dd/MM/yyyy HH:mm:ss", "dd/MM/yyyy HH:mm", "dd/MM/yyyy",
     "yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd")
 
-  def parseDate(c: Column): Column =
-    coalesce(DateFormats.map(f => try_to_timestamp(c.cast("string"), lit(f))): _*)
+  /** The digit shape of each of [[DateFormats]], in the same order. A
+    * string of shape i fails every earlier format (each needs a different
+    * length or separator), and if format i fails on it, so does every later
+    * one; so the one format its shape names gives the chain's answer. */
+  private val DateShapes: Seq[String] = Seq(
+    """^\d{2}/\d{2}/\d{4} \d{2}:\d{2}:\d{2}\z""", """^\d{2}/\d{2}/\d{4} \d{2}:\d{2}\z""",
+    """^\d{2}/\d{2}/\d{4}\z""", """^\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}\z""",
+    """^\d{4}-\d{2}-\d{2}\z""")
+
+  /** Each value is dispatched on its digit shape to the one format that can
+    * parse it, so a miss costs no parse exception per earlier format. Values
+    * of no shape (single-digit fields, padding, 5-digit years, trailing
+    * text) go through the full coalesce chain. */
+  def parseDate(c: Column): Column = {
+    val s = c.cast("string")
+    val parsed = DateFormats.map(f => try_to_timestamp(s, lit(f)))
+    DateShapes.zip(parsed).tail.foldLeft(
+      when(s.rlike(DateShapes.head), parsed.head)) { case (w, (shape, p)) =>
+      w.when(s.rlike(shape), p)
+    }.otherwise(coalesce(parsed: _*))
+  }
 
   val DateColumns: Seq[String] = Seq(
     "Agendamento Inicio", "Agendamento Final", "Data_Marcacao",

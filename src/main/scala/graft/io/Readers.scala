@@ -1,12 +1,13 @@
 package graft.io
 
-import java.nio.ByteBuffer
+import java.nio.{ByteBuffer, CharBuffer}
 import java.nio.charset.{Charset, CodingErrorAction}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** CSV ingestion matching the reference's defensive loaders:
   *  - S1 multi-encoding retry (utf-8 → cp1252 → latin1),
@@ -46,22 +47,73 @@ object Readers {
     else None
   }
 
-  /** Strict-decode probe: does `charset` decode the first MB of `path`? */
+  /** Strict-decode probe: does `charset` decode the first MB of `path`?
+    * A sample cut short of the end of the file may end inside a multibyte
+    * character, so it is decoded as incomplete input: a trailing partial
+    * sequence is underflow, and only a malformed or unmappable byte fails. */
   private[io] def decodes(path: String, charset: String): Boolean =
     firstDataFile(path).exists { f =>
       val in = Files.newInputStream(f)
       try {
         val buf = in.readNBytes(ProbeBytes)
+        val endOfInput = buf.length < ProbeBytes || in.read() == -1
         val dec = Charset.forName(charset).newDecoder()
           .onMalformedInput(CodingErrorAction.REPORT)
           .onUnmappableCharacter(CodingErrorAction.REPORT)
-        // tail bytes may split a multibyte char — tolerate only at the end
-        Try {
-          dec.decode(ByteBuffer.wrap(
-            if (buf.length == ProbeBytes) buf.dropRight(4) else buf))
-        }.isSuccess
+        val out = CharBuffer.allocate(
+          math.ceil(buf.length * dec.maxCharsPerByte.toDouble).toInt)
+        dec.decode(ByteBuffer.wrap(buf), out, endOfInput).isUnderflow
       } finally in.close()
     }
+
+  // Spark 4 whitelists CSV charsets (utf-8/16/32, iso-8859-1, us-ascii);
+  // anything else (e.g. the reference's cp1252) needs the legacy flag.
+  private val BuiltinCharsets = Set("utf-8", "utf-16", "utf-16be", "utf-16le",
+    "utf-32", "iso-8859-1", "us-ascii")
+
+  /** For an ASCII-compatible single-byte charset, the chars that its bytes
+    * 0x80-0xFF read as in ISO-8859-1 and the chars they are in `charset`,
+    * where the two differ (windows-1252: 0x80-0x9F). None for any other
+    * charset. Undefined bytes map to U+FFFD, as a Spark read does. */
+  private def singleByteMap(charset: String): Option[(String, String)] = {
+    val cs = Charset.forName(charset)
+    val chars = (0 to 0xFF).map(b => new String(Array(b.toByte), cs))
+    val asciiSame = (0 until 0x80).forall(b => chars(b) == b.toChar.toString)
+    if (!asciiSame || chars.exists(_.length != 1)) None
+    else {
+      val diff = (0x80 to 0xFF).filter(b => chars(b) != b.toChar.toString)
+      Some((diff.map(_.toChar).mkString, diff.map(chars(_)).mkString))
+    }
+  }
+
+  /** A CSV read of `path` in `charset`. The legacy-charset flag is read
+    * from whichever session RUNS a query, so a frame read through a flagged
+    * clone fails once it is joined into a frame of the caller's session
+    * (the price table into the base). A single-byte charset therefore needs
+    * no flag: it is read as ISO-8859-1, one char per byte, and the high half
+    * is mapped to `charset` with `translate` in every string column and in
+    * the header. Any other non-builtin charset is read through a clone with
+    * the flag set; the caller's session is never mutated (same pattern as
+    * Tables.events; see TablesConfScopeSpec). */
+  private def readCsv(spark: SparkSession, path: String, charset: String,
+                      options: Map[String, String]): DataFrame = {
+    def read(s: SparkSession, cs: String) =
+      s.read.options(options).option("encoding", cs).csv(path)
+    if (BuiltinCharsets.contains(charset.toLowerCase)) read(spark, charset)
+    else singleByteMap(charset) match {
+      case Some((from, to)) =>
+        val raw = read(spark, "ISO-8859-1")
+        val high = from.zip(to).toMap
+        raw.select(raw.schema.fields.toSeq.map { f =>
+          val c = if (f.dataType == StringType) translate(col(f.name), from, to)
+                  else col(f.name)
+          c.as(f.name.map(ch => high.getOrElse(ch, ch)))
+        }: _*)
+      case None =>
+        read(graft.core.Sessions.scoped(spark,
+          "spark.sql.legacy.javaCharsets" -> "true"), charset)
+    }
+  }
 
   /** S1: CSV read with encoding retry and the reference's NA tokens. */
   def csvWithEncodingRetry(
@@ -72,25 +124,8 @@ object Readers {
     val charset = charsets.find(decodes(path, _)).getOrElse(
       throw new IllegalArgumentException(
         s"no charset in ${charsets.mkString(",")} decodes $path"))
-    // Spark 4 whitelists CSV charsets (utf-8/16/32, iso-8859-1, us-ascii);
-    // anything else (e.g. the reference's cp1252) needs the legacy flag.
-    // The flag is consulted when the scan executes, so it is scoped to a
-    // cloned session (shared SparkContext, private SQLConf) that stays
-    // attached to this relation — the caller's session is never mutated
-    // (same pattern as Tables.events; see TablesConfScopeSpec).
-    val builtin = Set("utf-8", "utf-16", "utf-16be", "utf-16le", "utf-32",
-      "iso-8859-1", "us-ascii")
-    val reader =
-      if (builtin.contains(charset.toLowerCase)) spark
-      else graft.core.Sessions.scoped(spark,
-        "spark.sql.legacy.javaCharsets" -> "true")
-    val df = reader.read
-      .option("sep", sep)
-      .option("header", header)
-      .option("encoding", charset)
-      .option("nullValue", "")
-      .option("inferSchema", "true")
-      .csv(path)
+    val df = readCsv(spark, path, charset, Map("sep" -> sep,
+      "header" -> header.toString, "nullValue" -> "", "inferSchema" -> "true"))
     // extra NA tokens (Spark supports a single nullValue): one collapsed
     // projection — a single when(isin) per column, not |cols|x|tokens|
     // stacked withColumn layers
@@ -116,10 +151,8 @@ object Readers {
       yield (sep, cs)
     combos.view.flatMap { case (sep, cs) =>
       Try {
-        val raw = spark.read
-          .option("sep", sep).option("header", "true")
-          .option("encoding", cs).option("mode", "DROPMALFORMED")
-          .csv(path)
+        val raw = readCsv(spark, path, cs,
+          Map("sep" -> sep, "header" -> "true", "mode" -> "DROPMALFORMED"))
         if (raw.columns.length < 3)
           throw new IllegalArgumentException(s"needs ≥3 cols, got ${raw.columns.length}")
         val named =
@@ -127,11 +160,10 @@ object Readers {
           else raw.select(raw.columns.take(3).map(col): _*).toDF(PriceCols: _*)
         val parsed = named.withColumn("Valor_Convenio",
           graft.functions.money_br(col("Valor_Convenio")))
-        // validation gate on a bounded sample (etl_pipeline.py:146-151)
-        val sample = parsed.select("Valor_Convenio").limit(100)
-          .agg(count(lit(1)).as("n"), count(col("Valor_Convenio")).as("ok"))
-          .head()
-        if (sample.getLong(0) == 0 || sample.getLong(1) * 2 < sample.getLong(0))
+        // validation gate on a bounded sample (etl_pipeline.py:146-151),
+        // counted on the driver: 100 values need no shuffle to one task
+        val sample = parsed.select("Valor_Convenio").limit(100).collect()
+        if (sample.isEmpty || sample.count(!_.isNullAt(0)) * 2 < sample.length)
           throw new IllegalArgumentException("numeric validation failed")
         parsed
       }.toOption

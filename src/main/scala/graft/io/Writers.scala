@@ -1,6 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, graftshim}
+import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType}
 
@@ -15,7 +16,13 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   * write fully distributed — the reference's `toPandas().to_csv()`
   * (Criptografia.py:175-183) collects the world to the driver; the Spark
   * replacement for "one output file" is `coalesce(1)`, which still writes
-  * on an executor. */
+  * on an executor.
+  *
+  * A one-file sink of a globally sorted frame sorts inside its one
+  * partition: `orderBy` then `coalesce(1)` would plan a range exchange
+  * (a sampling job whose sampled keys return to the driver, plus a
+  * shuffle) only to merge every range back into one task. See
+  * [[singlePartition]]. */
 object Writers {
 
   /** Render floating-point columns as 2-decimal, comma-decimal strings. */
@@ -59,17 +66,34 @@ object Writers {
       .format("parquet")
       .saveAsTable(table)
 
+  /** The frame as one partition, in the same row order.
+    *
+    * When the analyzed plan ends in a global `Sort`, the sort moves above
+    * the coalesce and becomes local: `Sort(order, global = false,
+    * Repartition(1, shuffle = false, child))`. A global sort followed by
+    * `coalesce(1)` yields the same rows in the same order as `coalesce(1)`
+    * followed by a sort of that one partition, but the latter plans no
+    * `RangePartitioning` exchange. Any other frame is plain `coalesce(1)`
+    * and keeps its input order. */
+  private[graft] def singlePartition(df: DataFrame): DataFrame =
+    graftshim.analyzed(df) match {
+      case Sort(order, true, child, hint) =>
+        graftshim.ofRows(df.sparkSession,
+          Sort(order, global = false, Repartition(1, shuffle = false, child), hint))
+      case _ => df.coalesce(1)
+    }
+
   /** S5: BR-locale CSV sink. `singleFile=true` mirrors the reference's
-    * one-file outputs without any driver collect. */
+    * one-file outputs without any driver collect: the frame is written
+    * from one partition ([[singlePartition]]), so a sorted report lands
+    * in one file in its sort order. */
   def csvBr(df: DataFrame, path: String, encoding: String = "UTF-8",
-            singleFile: Boolean = false): Unit = {
-    val out = brDecimalProjection(df)
-    (if (singleFile) out.coalesce(1) else out)
+            singleFile: Boolean = false): Unit =
+    brDecimalProjection(if (singleFile) singlePartition(df) else df)
       .write
       .option("sep", ";")
       .option("header", "true")
       .option("encoding", encoding)
       .mode("overwrite")
       .csv(path)
-  }
 }

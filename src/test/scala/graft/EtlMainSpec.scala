@@ -2,8 +2,12 @@ package graft
 
 import java.nio.charset.Charset
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Golden-file test of the runnable end-to-end entry point: EtlMain.run
   * over the FIXTURES.md §A fixture (same 8 rows as EtlPipelineSpec) must
@@ -26,6 +30,18 @@ class EtlMainSpec extends SparkSpec {
       .find(_.getFileName.toString.endsWith(".csv"))
       .getOrElse(fail(s"no csv part in $name"))
     new String(Files.readAllBytes(csv), "UTF-8").linesIterator.toSeq
+  }
+
+  /** (output path, executed plan) of every file write the run makes. */
+  private val writes = new ConcurrentLinkedQueue[(String, String)]()
+  private val writeListener = new QueryExecutionListener {
+    def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      qe.logical match {
+        case w: InsertIntoHadoopFsRelationCommand =>
+          writes.add(w.outputPath.toString -> qe.executedPlan.toString)
+        case _ =>
+      }
+    def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
   }
 
   private lazy val outDir: String = {
@@ -56,17 +72,18 @@ class EtlMainSpec extends SparkSpec {
     val occPath = write(dir, "occ.csv",
       "Nome_Medico;qtde_horarios_disponiveis\nDR A;10\ndr a;5\nDr B;4\n", "UTF-8")
     val out = dir.resolve("out").toString
+    spark.listenerManager.register(writeListener)
     EtlMain.run(spark, basePath, pricePath, out, Some(occPath),
       asOf = to_timestamp(lit("2024-06-01 00:00:00")))
     out
   }
 
+  private val ReportSinks = Seq("agenda_comparecimento", "status_por_turno",
+    "perfil_noshow", "financeiro", "atravessamento", "fluxo_pacientes_agregado",
+    "indicadores_confirmacao", "qualidade_dados", "perfil_agenda")
+
   test("all ten contract files exist with headers and data") {
-    val names = Seq("base_tratada_completa", "agenda_comparecimento",
-      "status_por_turno", "perfil_noshow", "financeiro", "atravessamento",
-      "fluxo_pacientes_agregado", "indicadores_confirmacao",
-      "qualidade_dados", "perfil_agenda")
-    names.foreach { n =>
+    ("base_tratada_completa" +: ReportSinks).foreach { n =>
       val lines = readSink(outDir, n)
       assert(lines.length >= 2, s"$n: expected header + data, got ${lines.length} lines")
       assert(lines.head.contains(";"), s"$n: not ';'-separated")
@@ -119,5 +136,21 @@ class EtlMainSpec extends SparkSpec {
     assert(lines.length === 9) // header + 8 rows
     assert(!lines.head.split(";").exists(_.startsWith("key_")))
     assert(lines.head.split(";").contains("Status_Consolidado"))
+  }
+
+  test("the nine sorted report sinks plan no range exchange") {
+    val out = outDir
+    // listener callbacks arrive on the listener bus, after the writes
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    def planOf(name: String): Option[String] = writes.asScala
+      .collectFirst { case (path, plan) if path.endsWith(s"/$name") => plan }
+    while (ReportSinks.exists(planOf(_).isEmpty) && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    spark.listenerManager.unregister(writeListener)
+    ReportSinks.foreach { n =>
+      val plan = planOf(n).getOrElse(fail(s"no write plan seen for $n under $out"))
+      assert(!plan.contains("rangepartitioning"), s"$n plans a range exchange:\n$plan")
+      assert(plan.contains("Sort ["), s"$n lost its sort:\n$plan")
+    }
   }
 }

@@ -2,12 +2,15 @@ package graft
 
 import java.nio.charset.Charset
 import java.nio.file.{Files, Path}
+import org.apache.spark.sql.functions._
+import graft.etl.Pipeline
 import graft.io.Readers
 
 /** Encoding-retry, separator-sniffing, and optional-file reader contracts
   * (SURVEY.md §2.1 S1/S2/S4) against byte-exact fixture files written in
   * the encodings under test. */
 class IoSpec extends SparkSpec {
+  import spark.implicits._
 
   private def write(dir: Path, name: String, text: String, cs: String): String = {
     val p = dir.resolve(name)
@@ -96,5 +99,37 @@ class IoSpec extends SparkSpec {
     }
     val grown = openFds() - before
     assert(grown < 50, s"200 probes of a directory leaked $grown fds")
+  }
+
+  test("S1: a UTF-8 file over 1 MB with a 2-byte character split at a probe cut reads as UTF-8") {
+    // "Joséabé" puts the lead byte 0xC3 of its first é 5 bytes before
+    // the 1 MB probe boundary and that of its second é on the last byte
+    // of the sample, so the probe's sample ends inside a character
+    val probe = 1 << 20
+    val head = "a;b\n"
+    val filler = "x;1\n" * ((probe - 8 - head.length) / 4)
+    val text = head + filler + "Joséabé;1\n" + "Ana;2\nJoão;3\n"
+    val bytes = text.getBytes("UTF-8")
+    assert(bytes(probe - 5) == 0xC3.toByte && bytes(probe - 1) == 0xC3.toByte)
+    val dir = Files.createTempDirectory("io_cut")
+    val p = dir.resolve("base.csv")
+    Files.write(p, bytes)
+    val df = Readers.csvWithEncodingRetry(spark, p.toString, sep = ";")
+    val names = df.filter(col("a") =!= "x").collect().map(_.getString(0)).toSeq
+    assert(names === Seq("Joséabé", "Ana", "João"))
+  }
+
+  test("S2: a windows-1252 price key with a 0x80-0x9F letter joins its base row") {
+    // Š is 0x8A in windows-1252; read as ISO-8859-1 it becomes a C1
+    // control character, which key normalization drops
+    val dir = Files.createTempDirectory("io_cp1252")
+    val p = write(dir, "precos.txt",
+      "Procedimento\tConvenio\tValor_Convenio\nŠtress Teste\tUnimed\t120,00\n",
+      "windows-1252")
+    val prices = Readers.csvPriceTable(spark, p)
+    assert(prices.collect()(0).getString(0) === "Štress Teste")
+    val base = Seq(("Štress Teste", "UNIMED")).toDF("Procedimento", "Convenio")
+    val joined = Pipeline.priceJoin(base, prices).collect()
+    assert(joined.map(_.getAs[Double]("Valor")).toSeq === Seq(120.0))
   }
 }
