@@ -23,8 +23,9 @@ import graft.reports.Reports
   * all ten sinks branch off it (the reference holds `df` in memory the
   * same way). Each aggregate is a single hash-agg over low-cardinality
   * keys; only the full-base export writes fact-scale data, and it streams
-  * distributed (no driver collect anywhere — the one `.head()` is the
-  * scalar KPI row for the console summary).
+  * distributed. The driver collects two bounded results only: the scalar
+  * KPI row (`.head()`) for the console summary, and the price table's
+  * 100-row numeric-validation sample in [[Readers.csvPriceTable]].
   */
 object EtlMain {
 

@@ -1,28 +1,73 @@
 package graft.core
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 
-/** Local-filesystem scratch helpers for the gates that must materialize
-  * intermediate state (streaming sources/sinks, snapshot versions).
-  * ONE implementation of recursive delete — the walk-reverse-delete
-  * snippet was previously duplicated at two sites, sharing the same
-  * latent flaw (an unclosed Files.walk stream holding directory
-  * handles until GC). */
+import scala.jdk.CollectionConverters._
+
+/** Local-filesystem helpers: the ONE owner of the file idioms the
+  * lakehouse (DocStore tables, ANN indexes) and the scratch caches use.
+  *
+  *  - [[list]] / [[walk]]: directory listings, materialized and closed
+  *    before they return. An unclosed `Files.list`/`Files.walk` stream
+  *    holds a directory handle until GC; no other source file calls
+  *    them (a spec pins this).
+  *  - [[numbered]]: the `<prefix><n>` name scan behind `MANIFEST.v<n>`,
+  *    `SCHEMA.upto-v<n>` and `SCHEMA.gen-<n>`.
+  *  - [[publish]]: the atomic replace of a small metadata file (MANIFEST,
+  *    SCHEMA, PART_SEQ, CHECKPOINT, PROPS, branch refs, index MANIFEST):
+  *    readers see the old bytes or the new, never a partial file.
+  *  - Recursive delete and copy of scratch and table directories.
+  *
+  * Directory and segment renames stay at their call sites: the staged
+  * CTAS/clone/OPTIMIZE dirs, segment publish renames, the commit lock
+  * steal and the Scratch artifact move each carry their own collision
+  * rule, which a replace-always publish would break. */
 object Fs {
 
-  /** Recursively delete `dir` if it exists. The walk stream is fully
-    * materialized before any delete (walk is lazy — deleting under a
-    * live traversal is undefined) and closed deterministically. */
+  /** Entries of `dir` (not recursive), materialized and closed. */
+  def list(dir: Path): Vector[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.toVector finally s.close()
+  }
+
+  /** `dir` and everything under it, parents before children,
+    * materialized and closed (walk is lazy — mutating under a live
+    * traversal is undefined). */
+  def walk(dir: Path): Vector[Path] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.toVector finally s.close()
+  }
+
+  /** Ascending `n` of the entries of `dir` named exactly `<prefix><n>`,
+    * `n` in canonical decimal (no sign, no leading zero), so
+    * `s"$prefix$n"` names the entry back. Temp files, suffixed copies
+    * and non-numeric tails are ignored. */
+  def numbered(dir: Path, prefix: String): Vector[Long] =
+    list(dir).map(_.getFileName.toString).filter(_.startsWith(prefix))
+      .map(_.substring(prefix.length))
+      .filter(d => d.nonEmpty && d.forall(c => c >= '0' && c <= '9') &&
+        (d == "0" || d.head != '0'))
+      .flatMap(_.toLongOption).sorted
+
+  /** Atomically replace (or create) `dir/name` with `bytes`: write a
+    * dot-temp sibling, then rename it over `name`. A crash leaves the old
+    * file intact. `tmp` overrides the temp sibling's default name,
+    * `.<name>-tmp`. */
+  def publish(dir: Path, name: String, bytes: Array[Byte],
+      tmp: String = ""): Unit = {
+    val t = dir.resolve(if (tmp.isEmpty) s".$name-tmp" else tmp)
+    Files.write(t, bytes)
+    Files.move(t, dir.resolve(name),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** [[publish]] of UTF-8 text. */
+  def publish(dir: Path, name: String, text: String): Unit =
+    publish(dir, name, text.getBytes("UTF-8"))
+
+  /** Recursively delete `dir` if it exists. */
   def deleteRecursively(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val stream = Files.walk(dir)
-      val paths =
-        try {
-          import scala.jdk.CollectionConverters._
-          stream.iterator().asScala.toVector
-        } finally stream.close()
-      paths.reverse.foreach(Files.deleteIfExists(_))
-    }
+    if (Files.exists(dir)) walk(dir).reverse.foreach(Files.deleteIfExists(_))
 
   def deleteRecursively(dir: String): Unit =
     deleteRecursively(java.nio.file.Paths.get(dir))
@@ -33,20 +78,12 @@ object Fs {
     * CONSUME their input state (compaction, DELETE) re-hydrate a
     * Scratch-built pristine fixture in milliseconds per invocation
     * instead of rebuilding it inside the timed region. */
-  def copyRecursively(src: Path, dst: Path): Unit = {
-    val stream = Files.walk(src)
-    val paths =
-      try {
-        import scala.jdk.CollectionConverters._
-        stream.iterator().asScala.toVector
-      } finally stream.close()
-    paths.foreach { p =>
+  def copyRecursively(src: Path, dst: Path): Unit =
+    walk(src).foreach { p =>
       val to = dst.resolve(src.relativize(p).toString)
       if (Files.isDirectory(p)) Files.createDirectories(to)
-      else Files.copy(p, to,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      else Files.copy(p, to, StandardCopyOption.REPLACE_EXISTING)
     }
-  }
 
   /** Delete `dir` when the JVM exits — for scratch a gate's RESULT
     * DataFrame still lazily reads (deleting eagerly would break a later

@@ -53,16 +53,10 @@ object Scratch {
   def sourceSignature(dir: String): String = {
     val p = Paths.get(dir)
     if (!Files.exists(p)) return "absent"
-    val stream = Files.walk(p)
-    val entries =
-      try {
-        import scala.jdk.CollectionConverters._
-        stream.iterator().asScala
-          .filter(Files.isRegularFile(_))
-          .map(f => s"${p.relativize(f)}:${Files.size(f)}:" +
-            Files.getLastModifiedTime(f).toMillis)
-          .toVector.sorted
-      } finally stream.close()
+    val entries = Fs.walk(p).filter(Files.isRegularFile(_))
+      .map(f => s"${p.relativize(f)}:${Files.size(f)}:" +
+        Files.getLastModifiedTime(f).toMillis)
+      .sorted
     keyHash(entries.mkString("\n"))
   }
 
@@ -99,14 +93,10 @@ object Scratch {
     * than an hour — a LIVE concurrent build's staging must survive. */
   private def sweepStaleStaging(name: String): Unit = {
     val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-    val stream = Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      stream.iterator().asScala
-        .filter(d => d.getFileName.toString.startsWith(s".${name}_stg_") &&
-          Files.getLastModifiedTime(d).toMillis < cutoff)
-        .foreach(d => try Fs.deleteRecursively(d) catch { case _: Exception => () })
-    } finally stream.close()
+    Fs.list(root)
+      .filter(d => d.getFileName.toString.startsWith(s".${name}_stg_") &&
+        Files.getLastModifiedTime(d).toMillis < cutoff)
+      .foreach(d => try Fs.deleteRecursively(d) catch { case _: Exception => () })
   }
 
   /** Test hook: drop one artifact so a spec can observe a rebuild. */

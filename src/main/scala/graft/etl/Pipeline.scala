@@ -29,13 +29,6 @@ object Pipeline {
     df.withColumnsRenamed(present)
   }
 
-  /** P3: blacklist anti-filter on the normalized doctor id
-    * (etl_pipeline.py:171-181). Set-based for small lists; callers with a
-    * large list should left_anti-join instead (see q18). */
-  def dropBlacklisted(df: DataFrame, blacklist: Seq[String]): DataFrame =
-    if (blacklist.isEmpty) df
-    else df.filter(!upper(trim(col("ID_Medico_Anon"))).isin(blacklist: _*))
-
   /** F3: null-sentinel substitution (Criptografia.py:75-78): null →
     * a literal sentinel (e.g. 'CPF_NULO'), else the string value. */
   def nullSentinel(df: DataFrame, column: String, sentinel: String): DataFrame =
@@ -68,15 +61,6 @@ object Pipeline {
       mapping.foldLeft(when(lit(false), lit(""))) { case (acc, (k, v)) =>
         acc.when(col(column) === k, v)
       }.otherwise(col(column)))
-
-  /** F5: SHA-256 pseudonymization (Criptografia.py:12-42): replace a
-    * natural-key column with a surrogate id derived from it (+ optional
-    * secondary), dropping the original. */
-  def pseudonymizeCol(df: DataFrame, src: String, idCol: String,
-                      secondary: Option[String] = None): DataFrame = {
-    val parts = col(src) +: secondary.map(col).toSeq
-    df.withColumn(idCol, pseudonymize(parts: _*)).drop(src)
-  }
 
   /** F7: day-first multi-format timestamp parse — the pandas flexible
     * parser mimicked with a try_to_timestamp coalesce chain

@@ -3,7 +3,6 @@ package graft.io
 import java.nio.{ByteBuffer, CharBuffer}
 import java.nio.charset.{Charset, CodingErrorAction}
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,20 +29,15 @@ object Readers {
 
   private val ProbeBytes = 1 << 20
 
-  /** First data file under `path` (a file, or a Spark CSV output dir).
-    * The directory listing is closed here: an unclosed `Files.list`
-    * holds a directory handle, and every charset probe lists again. */
+  /** First data file under `path` (a file, or a Spark CSV output dir). */
   private def firstDataFile(path: String): Option[Path] = {
     val p = Paths.get(path)
     if (Files.isRegularFile(p)) Some(p)
-    else if (Files.isDirectory(p)) {
-      val listing = Files.list(p)
-      try listing.iterator().asScala
+    else if (Files.isDirectory(p))
+      graft.core.Fs.list(p)
         .filter(f => Files.isRegularFile(f) && !f.getFileName.toString.startsWith(".") &&
           !f.getFileName.toString.startsWith("_"))
-        .toVector.sortBy(_.getFileName.toString).headOption
-      finally listing.close()
-    }
+        .sortBy(_.getFileName.toString).headOption
     else None
   }
 

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import graft.core.Fs
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -243,14 +245,7 @@ object AnnIndex {
       * the retention pins all read through here; r19 review). */
     def versionCopies: Seq[Int] =
       if (!Files.exists(root)) Seq.empty
-      else {
-        val s = Files.list(root)
-        try s.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(_.startsWith("MANIFEST.v"))
-          .map(_.stripPrefix("MANIFEST.v").toInt).toVector.sorted
-        finally s.close()
-      }
+      else Fs.numbered(root, "MANIFEST.v").map(_.toInt)
     /** Expire retained copies strictly below `v` (the current
       * MANIFEST file is untouched — readers resolve from it). */
     def expireCopiesBelow(v: Int): Unit =
@@ -266,15 +261,12 @@ object AnnIndex {
           s"manifest entry may not contain ',' (got: $kind,$p)")
       }
       Files.createDirectories(root)
-      val tmp = root.resolve(s".mf-stg-$v")
-      Files.write(tmp, entries.map { case (k, p) => s"$k,$p" }
-        .mkString("\n").getBytes("UTF-8"))
-      // crash-retry of the same publish must be idempotent, not fatal
-      Files.copy(tmp, root.resolve(s"MANIFEST.v$v"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Files.move(tmp, mf,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val bytes = entries.map { case (k, p) => s"$k,$p" }
+        .mkString("\n").getBytes("UTF-8")
+      // the version copy lands before the swap; a crash-retry of the
+      // same publish overwrites it (idempotent, not fatal)
+      Files.write(root.resolve(s"MANIFEST.v$v"), bytes)
+      Fs.publish(root, "MANIFEST", bytes)
     }
   }
 
@@ -342,13 +334,9 @@ object AnnIndex {
     * metadata (label=<v> subdirs), no data read. */
   private def coveredCells(dir: Path): Set[Long] =
     if (!Files.exists(dir)) Set.empty
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("label="))
-        .map(_.stripPrefix("label=").toLong).toSet
-      finally s.close()
-    }
+    else Fs.list(dir).map(_.getFileName.toString)
+      .filter(_.startsWith("label="))
+      .map(_.stripPrefix("label=").toLong).toSet
 
   // ------------------------------------------------------------------
   // lifecycle
@@ -419,7 +407,7 @@ object AnnIndex {
     // no published manifest -> anything under the root is a crashed
     // earlier build's unreachable debris; clear it so the rerun's
     // writes don't die on ErrorIfExists (review r18)
-    graft.core.Fs.deleteRecursively(root)
+    Fs.deleteRecursively(root)
     val head = DocStoreCommitOps.nextVersion(tablePath) - 1
     // read the CAPTURED version's retained manifest, not the live head:
     // a commit racing between the version capture and this scan would
@@ -491,14 +479,10 @@ object AnnIndex {
       // partitioned write routes null-src rows to the hive default
       // partition dir, so one directory listing (no data read, no
       // second corpus pass) proves their presence (r18 advice)
-      val stagedDirs = {
-        val l = Files.list(stage)
-        try l.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("src=")).toVector
-        finally l.close()
-      }
+      val stagedDirs = Fs.list(stage).map(_.getFileName.toString)
+        .filter(_.startsWith("src="))
       if (stagedDirs.exists(_.contains("__HIVE_DEFAULT_PARTITION__"))) {
-        graft.core.Fs.deleteRecursively(root)
+        Fs.deleteRecursively(root)
         throw new IllegalArgumentException(
           s"ann_build: rows with NULL '$filterCol' cannot join any " +
             "sub-index and would vanish from filtered serving — " +
@@ -537,7 +521,7 @@ object AnnIndex {
       } }
       val cells = perSub.map(_._1).sum
       val vecs = perSub.map(_._2).sum
-      graft.core.Fs.deleteRecursively(stage)
+      Fs.deleteRecursively(stage)
       DocStoreCommitOps.withCommitLock(root.toString) {
         m.publish(Seq(("cols", s"$idCol|$vecCol|$labelCol"),
           ("filter", filterCol)) ++
@@ -788,7 +772,7 @@ object AnnIndex {
     * own to come out at ~one file per cell. */
   private def writeFragment(root: Path, w: Long, slice: DataFrame): Unit = {
     val fragRel = s"frag-$w"
-    graft.core.Fs.deleteRecursively(root.resolve(fragRel))
+    Fs.deleteRecursively(root.resolve(fragRel))
     inParallel(
       slice.write.partitionBy("label")
         .parquet(root.resolve(fragRel).resolve("vectors").toString),
@@ -828,7 +812,7 @@ object AnnIndex {
         graft.core.Phases("tomb_resolve") { resolved.count() }
       if (resolvedN > 0) {
         val tombRel = s"tomb-$w"
-        graft.core.Fs.deleteRecursively(root.resolve(tombRel))
+        Fs.deleteRecursively(root.resolve(tombRel))
         graft.core.Phases("tomb_write") {
           inParallel(
             clusterForWrite(resolved, "label").write.partitionBy("label")
@@ -1400,7 +1384,7 @@ object AnnIndex {
     // a crashed earlier attempt may have left this dir half-written
     // and unreachable (its manifest swap never ran) — clear it so the
     // documented crash-rerun actually reruns (review r18)
-    graft.core.Fs.deleteRecursively(root.resolve(foldRel))
+    Fs.deleteRecursively(root.resolve(foldRel))
     // ONE affected-cells-only pass: current pool resolution (newest
     // layer per cell + fragments - tombstones), is_new preserved.
     // The sealed centroid write below is independent (it reads the
@@ -1450,7 +1434,7 @@ object AnnIndex {
         keptFolds.map(("fold", _)), published)
       (curFrags ++ curTombs ++ folds.filterNot(keptFolds.contains))
         .foreach { rel =>
-          graft.core.Fs.deleteRecursively(root.resolve(rel)); retired += 1
+          Fs.deleteRecursively(root.resolve(rel)); retired += 1
         }
       // manifest retention (r18 verdict item 4): sync publishes one
       // MANIFEST.v<n> per table version, forever — an unbounded
@@ -1554,7 +1538,7 @@ object AnnIndex {
         s"ann_rebuild over '$vecCol' found no indexable vectors — " +
           "refusing to swap the index away")
       val era = s"base-${new Manifest(root).currentVersion + 1}"
-      graft.core.Fs.deleteRecursively(root.resolve(era))
+      Fs.deleteRecursively(root.resolve(era))
       // all three derive from the cached projection — concurrent
       var r: org.apache.spark.sql.Row = null
       inParallel(
@@ -1595,13 +1579,9 @@ object AnnIndex {
       val live: Set[String] =
         if (!m.exists) Set.empty
         else m.read().collect { case ("base", p) => p }.toSet
-      val orphans = {
-        val l = Files.list(root)
-        try l.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.startsWith("base-") && !live(n)).toVector
-        finally l.close()
-      }
-      orphans.foreach(n => graft.core.Fs.deleteRecursively(root.resolve(n)))
+      val orphans = Fs.list(root).map(_.getFileName.toString)
+        .filter(n => n.startsWith("base-") && !live(n))
+      orphans.foreach(n => Fs.deleteRecursively(root.resolve(n)))
     }
   }
 
@@ -1622,7 +1602,7 @@ object AnnIndex {
         case (k, p) if Set("base", "fold", "frag", "tomb")(k) => p }
       m.publish(Seq(("cols", cols), ("synced", head.toString),
         ("base", era)), published)
-      old.foreach(p => graft.core.Fs.deleteRecursively(root.resolve(p)))
+      old.foreach(p => Fs.deleteRecursively(root.resolve(p)))
       m.expireCopiesBelow(published)
     }
 
@@ -1637,7 +1617,7 @@ object AnnIndex {
         s"ann_rebuild found no indexable vectors — refusing to swap " +
           "the family away")
       val stage = root.resolve(".stage-rebuild")
-      graft.core.Fs.deleteRecursively(stage)
+      Fs.deleteRecursively(stage)
       // staging write ∥ centroid aggregation — same cached projection,
       // independent outputs; rows map after the NULL refusal below
       var centRowsRaw: Array[org.apache.spark.sql.Row] = null
@@ -1647,14 +1627,10 @@ object AnnIndex {
         { centRowsRaw = centroidTable(v, Seq("src"))
           .select(col("src"), col("label"), col("sv"), col("c"))
           .collect() })
-      val stagedDirs = {
-        val l = Files.list(stage)
-        try l.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("src=")).toVector
-        finally l.close()
-      }
+      val stagedDirs = Fs.list(stage).map(_.getFileName.toString)
+        .filter(_.startsWith("src="))
       if (stagedDirs.exists(_.contains("__HIVE_DEFAULT_PARTITION__"))) {
-        graft.core.Fs.deleteRecursively(stage)
+        Fs.deleteRecursively(stage)
         throw new IllegalArgumentException(
           s"ann_rebuild: rows with NULL '${fam.filterCol}' cannot " +
             "join any sub-index — refusing the rebuild")
@@ -1669,7 +1645,7 @@ object AnnIndex {
         val sub = root.resolve(s"src=$k")
         sweepOrphanEras(sub)
         val era = s"base-${new Manifest(sub).currentVersion + 1}"
-        graft.core.Fs.deleteRecursively(sub.resolve(era))
+        Fs.deleteRecursively(sub.resolve(era))
         Files.createDirectories(sub.resolve(era))
         Files.move(stage.resolve(s"src=$k"),
           sub.resolve(era).resolve("vectors"))
@@ -1681,7 +1657,7 @@ object AnnIndex {
         swapToEra(sub, cols, era, head)
         cells += mine.size; vecs += mine.map(_._3).sum
       }
-      graft.core.Fs.deleteRecursively(stage)
+      Fs.deleteRecursively(stage)
       DocStoreCommitOps.withCommitLock(root.toString) {
         val m = new Manifest(root)
         m.publish(Seq(("cols", cols), ("filter", fam.filterCol)) ++
@@ -1691,65 +1667,51 @@ object AnnIndex {
       // sub dirs) are unreachable once the family manifest stopped
       // listing them — delete after the publish
       val keep = srcs.map(k => s"src=$k").toSet
-      val orphans = {
-        val l = Files.list(root)
-        try l.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.startsWith("src=") && !keep(n)).toVector
-        finally l.close()
-      }
-      orphans.foreach(n => graft.core.Fs.deleteRecursively(root.resolve(n)))
+      val orphans = Fs.list(root).map(_.getFileName.toString)
+        .filter(n => n.startsWith("src=") && !keep(n))
+      orphans.foreach(n => Fs.deleteRecursively(root.resolve(n)))
       BuildStats(root.toString, head, cells, vecs)
     } finally { v.unpersist(); () }
   }
 
-  /** Every PUBLISHED index root under `tablePath/_ann`, flattened to
-    * (vecCol, scope, root) — family subs listed individually, crashed
-    * builds (no manifest) skipped. Directory metadata only. */
-  private def publishedRoots(tablePath: String): Seq[(String, String, Path)] = {
+  /** The vector columns of `tablePath` with a PUBLISHED index, sorted;
+    * crashed builds (a column dir with no manifest) skipped. Directory
+    * metadata only. */
+  def publishedColumns(tablePath: String): Seq[String] = {
     val annRoot = Paths.get(tablePath, "_ann")
-    if (!Files.exists(annRoot)) return Seq.empty
-    val cols = {
-      val l = Files.list(annRoot)
-      try l.iterator().asScala.map(_.getFileName.toString).toVector.sorted
-      finally l.close()
-    }
-    cols.flatMap { c =>
-      val root = annRoot.resolve(c)
-      if (!new Manifest(root).exists) Seq.empty
-      else if (isFamily(root))
+    if (!Files.exists(annRoot)) Seq.empty
+    else Fs.list(annRoot).map(_.getFileName.toString).sorted
+      .filter(c => new Manifest(annRoot.resolve(c)).exists)
+  }
+
+  /** Every published index root under `tablePath/_ann`, flattened to
+    * (vecCol, scope, root) — family subs listed individually. */
+  private def publishedRoots(tablePath: String): Seq[(String, String, Path)] =
+    publishedColumns(tablePath).flatMap { c =>
+      val root = dirFor(tablePath, c)
+      if (isFamily(root))
         loadFamily(root).subs.map(k => (c, s"src=$k", root.resolve(s"src=$k")))
       else Seq((c, "", root))
     }
-  }
 
   /** The vector columns whose published indexes DEPEND on `column`
     * (as their id, vector, label, or family filter column) — the DDL
     * guard's input: dropping or renaming such a column would strand
     * every later sync/serve against a name the manifest still
     * records. Metadata-only. */
-  def indexesDependingOn(tablePath: String, column: String): Seq[String] = {
-    val annRoot = Paths.get(tablePath, "_ann")
-    if (!Files.exists(annRoot)) return Seq.empty
-    val cols = {
-      val l = Files.list(annRoot)
-      try l.iterator().asScala.map(_.getFileName.toString).toVector.sorted
-      finally l.close()
+  def indexesDependingOn(tablePath: String, column: String): Seq[String] =
+    publishedColumns(tablePath).filter { c =>
+      val root = dirFor(tablePath, c)
+      val deps =
+        if (isFamily(root)) {
+          val f = loadFamily(root)
+          Seq(f.idCol, f.vecCol, f.labelCol, f.filterCol)
+        } else {
+          val l = load(root)
+          Seq(l.idCol, l.vecCol, l.labelCol)
+        }
+      deps.contains(column)
     }
-    cols.filter { c =>
-      val root = annRoot.resolve(c)
-      new Manifest(root).exists && {
-        val deps =
-          if (isFamily(root)) {
-            val f = loadFamily(root)
-            Seq(f.idCol, f.vecCol, f.labelCol, f.filterCol)
-          } else {
-            val l = load(root)
-            Seq(l.idCol, l.vecCol, l.labelCol)
-          }
-        deps.contains(column)
-      }
-    }
-  }
 
   /** Guard for CONTENT-destroying history resets (TRUNCATE, INSERT
     * OVERWRITE truncate commits, CREATE OR REPLACE): the index would
@@ -1844,7 +1806,7 @@ object AnnIndex {
   def drop(tablePath: String, vecCol: String): Boolean = {
     val root = dirFor(tablePath, vecCol)
     val existed = Files.exists(root)
-    graft.core.Fs.deleteRecursively(root)
+    Fs.deleteRecursively(root)
     existed
   }
 }

@@ -6,6 +6,8 @@ import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
 
+import graft.core.Fs
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -207,13 +209,8 @@ object DocStore {
     else spec.start - spec.step
   }
 
-  def writeIdentityHw(path: String, v: Long): Unit = {
-    val dir = Paths.get(path)
-    val tmp = dir.resolve(s".$IDENTITY_HW_FILE-tmp")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, dir.resolve(IDENTITY_HW_FILE),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def writeIdentityHw(path: String, v: Long): Unit =
+    Fs.publish(Paths.get(path), IDENTITY_HW_FILE, v.toString)
 
   def sectionOf(f: StructField, schemaIdx: Int): Int =
     if (f.metadata.contains(SECTION_KEY))
@@ -234,13 +231,8 @@ object DocStore {
     if (Files.exists(p)) Files.readString(p).trim.toInt else 0
   }
 
-  def writeSectionFloor(path: String, n: Int): Unit = {
-    val dir = Paths.get(path)
-    val tmp = dir.resolve(s".$SECTION_FLOOR_FILE-tmp")
-    Files.writeString(tmp, n.toString)
-    Files.move(tmp, dir.resolve(SECTION_FLOOR_FILE),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def writeSectionFloor(path: String, n: Int): Unit =
+    Fs.publish(Paths.get(path), SECTION_FLOOR_FILE, n.toString)
 
   /** The full primitive type surface an evolved (ADDed) column may
     * take — the Delta/Iceberg set a real lakehouse user reaches for
@@ -412,12 +404,9 @@ object DocStore {
   /** Archive `schema` (the OUTGOING schema of a widening ALTER) under
     * its own generation; first writer wins, like [[archiveSchema]]. */
   def archiveSchemaGen(path: String, schema: StructType): Unit = {
-    val dir = Paths.get(path)
-    val dst = dir.resolve(s"SCHEMA.gen-${nestedGenOf(schema)}")
-    if (Files.exists(dst)) return
-    val tmp = dir.resolve(".SCHEMA-gen-tmp")
-    Files.writeString(tmp, schema.json)
-    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+    val name = s"SCHEMA.gen-${nestedGenOf(schema)}"
+    if (!Files.exists(Paths.get(path, name)))
+      Fs.publish(Paths.get(path), name, schema.json)
   }
 
   /** The full schema in effect while the table's generation was `g`
@@ -1033,13 +1022,8 @@ object DocStore {
     if (Files.exists(p)) Files.readString(p).trim.toLong else 0L
   }
 
-  def writeSchemaSince(path: String, headVersion: Long): Unit = {
-    val dir = Paths.get(path)
-    val tmp = dir.resolve(".SCHEMA_SINCE-tmp")
-    Files.writeString(tmp, headVersion.toString)
-    Files.move(tmp, dir.resolve("SCHEMA_SINCE"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def writeSchemaSince(path: String, headVersion: Long): Unit =
+    Fs.publish(Paths.get(path), "SCHEMA_SINCE", headVersion.toString)
 
   /** Archive the OUTGOING schema before a change: `SCHEMA.upto-v<head>`
     * records the schema that served the table through version `head`.
@@ -1048,12 +1032,9 @@ object DocStore {
     * the archive. These archives are what lets RESTORE roll table
     * metadata back (Delta RESTORE semantics) instead of refusing. */
   def archiveSchema(path: String, head: Long): Unit = {
-    val dir = Paths.get(path)
-    val dst = dir.resolve(s"SCHEMA.upto-v$head")
-    if (Files.exists(dst)) return
-    val tmp = dir.resolve(".SCHEMA-arch-tmp")
-    Files.writeString(tmp, tableSchema(path).json)
-    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+    val name = s"SCHEMA.upto-v$head"
+    if (!Files.exists(Paths.get(path, name)))
+      Fs.publish(Paths.get(path), name, tableSchema(path).json)
   }
 
   /** The archived schema in effect AT version `v`: the smallest
@@ -1061,14 +1042,7 @@ object DocStore {
     * live schema still serves `v` (no change since), or the table was
     * ALTERed before archiving existed (caller must refuse, not guess). */
   def schemaArchiveAt(path: String, v: Long): Option[StructType] = {
-    val stream = Files.list(Paths.get(path))
-    val ks =
-      try stream.iterator().asScala
-        .flatMap(p => "^SCHEMA\\.upto-v(\\d+)$".r
-          .findFirstMatchIn(p.getFileName.toString))
-        .map(_.group(1).toLong).toVector.sorted
-      finally stream.close()
-    ks.find(_ >= v).map(k =>
+    Fs.numbered(Paths.get(path), "SCHEMA.upto-v").find(_ >= v).map(k =>
       org.apache.spark.sql.types.DataType.fromJson(
         Files.readString(Paths.get(path, s"SCHEMA.upto-v$k")))
         .asInstanceOf[StructType])
@@ -1078,10 +1052,7 @@ object DocStore {
     val canonical = coerceEvolved(schema)
     val dir = Paths.get(path)
     Files.createDirectories(dir)
-    val tmp = dir.resolve(".SCHEMA-tmp")
-    Files.writeString(tmp, canonical.json)
-    Files.move(tmp, dir.resolve("SCHEMA"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Fs.publish(dir, "SCHEMA", canonical.json)
   }
 
   /** ONE implementation of doc_id-bound tightening from a pushed
@@ -2916,25 +2887,18 @@ object DocStoreCommitOps {
       // sequence even when called directly (persistPartNumberFloor)
       math.max(intOf("COUNTER"), intOf(PART_SEQ_FILE))
     }
-    val stream = Files.walk(dir)
-    try math.max(floor, stream.iterator().asScala
+    math.max(floor, Fs.walk(dir)
       .flatMap(p => "^part-(\\d+)\\.gds$".r
         .findFirstMatchIn(p.getFileName.toString))
       .map(_.group(1).toInt).foldLeft(-1)(math.max) + 1)
-    finally stream.close()
   }
 
   /** Persist the current next-free part number as a floor that
     * survives file deletion — called by destructive operations
     * (SQL TRUNCATE) BEFORE they sweep segment files, so part names
     * are never reused across the wipe. */
-  def persistPartNumberFloor(path: String): Unit = {
-    val dir = Paths.get(path)
-    val tmp = dir.resolve(".COUNTER-tmp")
-    Files.writeString(tmp, nextPartNumber(path).toString)
-    Files.move(tmp, dir.resolve("COUNTER"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def persistPartNumberFloor(path: String): Unit =
+    Fs.publish(Paths.get(path), "COUNTER", nextPartNumber(path).toString)
 
   /** Monotone part-number sequence: `PART_SEQ` holds the next free
     * number and is maintained at EVERY commit by [[claimPartNumbers]].
@@ -2965,10 +2929,7 @@ object DocStoreCommitOps {
         Files.readString(seq).trim.toIntOption
           .getOrElse(nextPartNumber(path))
       else nextPartNumber(path) // legacy/first commit: one walk, then O(1)
-    val tmp = dir.resolve(s".$PART_SEQ_FILE-tmp")
-    Files.writeString(tmp, (base + math.max(k, 1)).toString)
-    Files.move(tmp, seq, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Fs.publish(dir, PART_SEQ_FILE, (base + math.max(k, 1)).toString)
     base
   }
 
@@ -3097,7 +3058,7 @@ object DocStoreCommitOps {
                 val tomb = dir.resolve(
                   s".COMMIT_LOCK.stale-${System.nanoTime()}")
                 Files.move(lock, tomb, StandardCopyOption.ATOMIC_MOVE)
-                graft.core.Fs.deleteRecursively(tomb)
+                Fs.deleteRecursively(tomb)
               } catch { case _: Exception => () } // lost the steal race
             } else if (System.currentTimeMillis() > deadline)
               throw new IllegalStateException(
@@ -3229,10 +3190,7 @@ object DocStoreCommitOps {
     // appends and must start on a fresh line
     val body = lines.sortBy(_.version).map(renderCkptLine)
       .map(_ + "\n").mkString
-    val tmp = dir.resolve(s".$CHECKPOINT_FILE-tmp")
-    Files.writeString(tmp, body)
-    Files.move(tmp, dir.resolve(CHECKPOINT_FILE),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Fs.publish(dir, CHECKPOINT_FILE, body)
   }
 
   /** O(1) per commit — a TRUE file append (r13 review finding: the
@@ -3317,11 +3275,9 @@ object DocStoreCommitOps {
     // Checked BEFORE the temp file is written so a refusal leaves no
     // stray `.MANIFEST-*` dotfile behind (r15 review finding).
     assertLockFence(path)
-    val tmpManifest = dir.resolve(s".MANIFEST-$manifestToken")
     Files.createDirectories(dir)
-    Files.write(tmpManifest, lines.mkString("\n").getBytes("UTF-8"))
-    Files.move(tmpManifest, dir.resolve(manifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Fs.publish(dir, manifestName, lines.mkString("\n").getBytes("UTF-8"),
+      tmp = s".MANIFEST-$manifestToken")
     // branch manifests version NOTHING: branch work stays invisible to
     // time travel and CDC until published (the WAP contract)
     if (manifestName != "MANIFEST") return 0L
@@ -3364,14 +3320,8 @@ object DocStoreCommitOps {
     // checkpoint travels verbatim) and costs zero per-file stats on
     // covered versions
     val ck = readCheckpoint(path)
-    val stream = Files.list(dir)
-    try stream.iterator().asScala
-      .flatMap(p => "^MANIFEST\\.v(\\d+)$".r
-        .findFirstMatchIn(p.getFileName.toString))
-      .map(_.group(1).toLong).toVector.sorted
-      .map(v => v -> ck.get(v).map(_.millis).getOrElse(
-        Files.getLastModifiedTime(dir.resolve(s"MANIFEST.v$v")).toMillis))
-    finally stream.close()
+    Fs.numbered(dir, "MANIFEST.v").map(v => v -> ck.get(v).map(_.millis)
+      .getOrElse(Files.getLastModifiedTime(dir.resolve(s"MANIFEST.v$v")).toMillis))
   }
 
   /** CDC timestamp window resolution (Delta's startingTimestamp /
@@ -3436,14 +3386,7 @@ object DocStoreCommitOps {
       var v = ck.keys.max
       while (Files.exists(Paths.get(path, s"MANIFEST.v${v + 1}"))) v += 1
       v + 1
-    } else {
-      val stream = Files.list(Paths.get(path))
-      try stream.iterator().asScala
-        .flatMap(p => "^MANIFEST\\.v(\\d+)$".r
-          .findFirstMatchIn(p.getFileName.toString))
-        .map(_.group(1).toLong).foldLeft(0L)(math.max) + 1
-      finally stream.close()
-    }
+    } else Fs.numbered(Paths.get(path), "MANIFEST.v").lastOption.getOrElse(0L) + 1
   }
 
   /** History reset for truncate overwrites: old versions reference the
@@ -3452,12 +3395,9 @@ object DocStoreCommitOps {
     * the numbering this reset restarts (a stale archive would hand a
     * later RESTORE a previous era's schema). */
   def clearVersions(path: String): Unit = {
-    val stream = Files.list(Paths.get(path))
-    try stream.iterator().asScala
-      .filter(p => p.getFileName.toString.matches(
-        "^(MANIFEST\\.v|SCHEMA\\.upto-v)\\d+$"))
-      .toVector.foreach(Files.delete)
-    finally stream.close()
+    val dir = Paths.get(path)
+    Seq("MANIFEST.v", "SCHEMA.upto-v").foreach(prefix =>
+      Fs.numbered(dir, prefix).foreach(n => Files.delete(dir.resolve(s"$prefix$n"))))
     // the checkpoint summarizes exactly the versions just deleted —
     // the new era re-seeds it at its first commit
     Files.deleteIfExists(Paths.get(path, CHECKPOINT_FILE))
@@ -3644,12 +3584,8 @@ class DocStoreStreamingWrite(path: String, schema: StructType,
       // with the retained names and brick the stream on every restart.
       // Final names carry (query, epoch), so a matching FILE proves
       // the epoch committed once, wherever its manifest entries went.
-      def onDisk: Boolean = {
-        val stream = Files.list(Paths.get(path))
-        try stream.iterator().asScala
-          .exists(_.getFileName.toString.startsWith(prefix))
-        finally stream.close()
-      }
+      def onDisk: Boolean =
+        Fs.list(Paths.get(path)).exists(_.getFileName.toString.startsWith(prefix))
       if (old.exists(_.name.startsWith(prefix)) || onDisk) {
         // replayed epoch — already applied; idempotent skip
         DocStoreCommitOps.dropStaged(path, messages)
@@ -4599,14 +4535,7 @@ object DocStoreScan {
     * Bounded by the number of widening ALTERs ever applied. */
   private[sources] def allGenWriteTypes(path: String)
       : Map[Long, Map[Int, DataType]] = {
-    val stream = Files.list(Paths.get(path))
-    val gens =
-      try stream.iterator().asScala
-        .flatMap(p => "^SCHEMA\\.gen-(\\d+)$".r
-          .findFirstMatchIn(p.getFileName.toString))
-        .map(_.group(1).toLong).toVector
-      finally stream.close()
-    gens.map { g =>
+    Fs.numbered(Paths.get(path), "SCHEMA.gen-").map { g =>
       val old = DocStore.schemaAtGen(path, g).get
       g -> old.fields.zipWithIndex.collect {
         case (f, i) if DocStore.isNestedType(f.dataType) =>

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
+import graft.core.Fs
+
 /** Branch refs for docstore tables — the Iceberg branch / Delta
   * shallow-clone shape that makes WRITE-AUDIT-PUBLISH possible: stage
   * commits on an isolated branch, audit them with real reads, then
@@ -59,12 +61,8 @@ object DocStoreBranches {
   def list(path: String): Seq[String] = {
     val dir = Paths.get(path)
     if (!Files.isDirectory(dir)) return Seq.empty
-    val stream = Files.list(dir)
-    try stream.iterator().asScala
-      .flatMap(p => "^BRANCH\\.(.+)$".r
-        .findFirstMatchIn(p.getFileName.toString).map(_.group(1)))
-      .toVector.sorted
-    finally stream.close()
+    Fs.list(dir).flatMap(p => "^BRANCH\\.(.+)$".r
+      .findFirstMatchIn(p.getFileName.toString).map(_.group(1))).sorted
   }
 
   private def sha256(p: Path): String = {
@@ -84,11 +82,8 @@ object DocStoreBranches {
       val base = DocStoreCommitOps.nextVersion(path) - 1
       Files.copy(dir.resolve("MANIFEST"), dir.resolve(manifestName(name)),
         StandardCopyOption.REPLACE_EXISTING)
-      val tmp = dir.resolve(s".BRANCH-$name-tmp")
-      Files.writeString(tmp,
+      Fs.publish(dir, refFile(name),
         s"base=$base\nsha=${sha256(dir.resolve("MANIFEST"))}")
-      Files.move(tmp, dir.resolve(refFile(name)),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
       base
     }
   }
@@ -157,10 +152,7 @@ object DocStoreBranches {
             }
             nv
         }
-        val mtmp2 = dir.resolve(s".PUBLISHED-$name-tmp")
-        Files.writeString(mtmp2, v.toString)
-        Files.move(mtmp2, marker,
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        Fs.publish(dir, publishedMarker(name), v.toString)
         Files.deleteIfExists(dir.resolve(refFile(name)))
         Files.deleteIfExists(dir.resolve(manifestName(name)))
         return v
@@ -189,10 +181,7 @@ object DocStoreBranches {
       // AND marker, and the branch face simply still resolves to the
       // branch manifest (== main's content after the fast-forward) —
       // re-running publish completes the cleanup
-      val mtmp = dir.resolve(s".PUBLISHED-$name-tmp")
-      Files.writeString(mtmp, v.toString)
-      Files.move(mtmp, dir.resolve(publishedMarker(name)),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      Fs.publish(dir, publishedMarker(name), v.toString)
       Files.delete(dir.resolve(refFile(name)))
       Files.delete(dir.resolve(manifestName(name)))
       v
@@ -231,13 +220,8 @@ object DocStoreBranches {
   /** Every segment name reachable from main: the live manifest plus
     * every retained version snapshot. */
   def mainReferencedNames(path: String): Set[String] = {
-    val dir = Paths.get(path)
-    val stream = Files.list(dir)
     val snapshots =
-      try stream.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.matches("^MANIFEST\\.v\\d+$")).toVector
-      finally stream.close()
+      Fs.numbered(Paths.get(path), "MANIFEST.v").map(v => s"MANIFEST.v$v")
     ("MANIFEST" +: snapshots)
       .flatMap(m => DocStore.readManifest(path, m).map(_.name)).toSet
   }

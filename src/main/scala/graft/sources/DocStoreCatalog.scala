@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
+import graft.core.Fs
+
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsDelete, SupportsNamespaces, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -107,15 +109,12 @@ class DocStoreCatalog extends TableCatalog with SupportsNamespaces
     * same policy as core.Scratch). */
   private def sweepStaleStaging(ns: Path): Unit = {
     val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-    val stream = Files.list(ns)
-    try stream.iterator().asScala
+    Fs.list(ns)
       .filter(p => p.getFileName.toString.startsWith(".stg-ctas-") &&
         (try Files.getLastModifiedTime(p).toMillis < cutoff
         catch { case _: Exception => false }))
-      .toVector
-      .foreach(p => try graft.core.Fs.deleteRecursively(p)
+      .foreach(p => try Fs.deleteRecursively(p)
       catch { case _: Exception => () })
-    finally stream.close()
   }
 
   private var catalogName: String = _
@@ -292,12 +291,8 @@ class DocStoreCatalog extends TableCatalog with SupportsNamespaces
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val ns = namespace.foldLeft(root)(_.resolve(_))
     if (!Files.isDirectory(ns)) throw new NoSuchNamespaceException(namespace)
-    val stream = Files.list(ns)
-    try stream.iterator().asScala
-      .filter(p => Files.isDirectory(p) && isTable(p))
-      .map(p => Identifier.of(namespace, p.getFileName.toString))
-      .toArray
-    finally stream.close()
+    Fs.list(ns).filter(p => Files.isDirectory(p) && isTable(p))
+      .map(p => Identifier.of(namespace, p.getFileName.toString)).toArray
   }
 
   /** Column DEFAULT values are first-class DDL (CREATE ... DEFAULT,
@@ -739,7 +734,7 @@ class DocStoreCatalog extends TableCatalog with SupportsNamespaces
 
   override def dropTable(ident: Identifier): Boolean = {
     if (!tableExists(ident)) return false
-    graft.core.Fs.deleteRecursively(dirOf(ident).toString)
+    Fs.deleteRecursively(dirOf(ident).toString)
     true
   }
 
@@ -751,14 +746,11 @@ class DocStoreCatalog extends TableCatalog with SupportsNamespaces
   }
 
   // ----- SupportsNamespaces: a namespace is a directory under root -----
-  override def listNamespaces(): Array[Array[String]] = {
-    val stream = Files.list(root)
-    try stream.iterator().asScala
+  override def listNamespaces(): Array[Array[String]] =
+    Fs.list(root)
       .filter(p => Files.isDirectory(p) && !isTable(p) &&
         !p.getFileName.toString.startsWith("."))
       .map(p => Array(p.getFileName.toString)).toArray
-    finally stream.close()
-  }
   override def listNamespaces(namespace: Array[String]): Array[Array[String]] =
     if (namespace.isEmpty) listNamespaces()
     else if (namespaceExists(namespace)) Array.empty
@@ -779,13 +771,9 @@ class DocStoreCatalog extends TableCatalog with SupportsNamespaces
       cascade: Boolean): Boolean = {
     val p = namespace.foldLeft(root)(_.resolve(_))
     if (!Files.isDirectory(p)) return false
-    if (!cascade) {
-      val st = Files.list(p) // close deterministically, like the other list sites
-      val nonEmpty = try st.findFirst().isPresent finally st.close()
-      if (nonEmpty) throw new IllegalStateException(
-        s"namespace ${namespace.mkString(".")} not empty")
-    }
-    graft.core.Fs.deleteRecursively(p.toString)
+    if (!cascade && Fs.list(p).nonEmpty) throw new IllegalStateException(
+      s"namespace ${namespace.mkString(".")} not empty")
+    Fs.deleteRecursively(p.toString)
     true
   }
 }
@@ -836,13 +824,16 @@ object DocStoreCatalog {
       .filterNot { case (k, _) => RESERVED(k) }
       .sortBy(_._1)
     if (persisted.nonEmpty)
-      Files.writeString(dir.resolve("PROPS"),
+      Fs.publish(dir, "PROPS",
         persisted.map { case (k, v) => s"$k=$v" }.mkString("\n"))
   }
 
   /** Read-modify-write of PROPS for ALTER ... SET/UNSET TBLPROPERTIES
     * (callers hold the table's commit lock). An empty result deletes
-    * the file — absence and emptiness must stay indistinguishable. */
+    * the file — absence and emptiness must stay indistinguishable. The
+    * rewrite is an atomic publish: write planners read PROPS without
+    * the lock, and a truncate-then-write would show them a table with
+    * no check constraints and the default row-level mode. */
   private[sources] def updateProps(dir: Path, set: Map[String, String],
       unset: Set[String]): Unit = {
     Option(set.get(MODE_KEY).orNull).foreach { m =>
@@ -859,10 +850,9 @@ object DocStoreCatalog {
     require(next.forall { case (k, v) =>
       !k.contains("=") && !k.contains("\n") && !v.contains("\n") },
       "docstore table property keys must not contain '=' or newlines")
-    if (next.isEmpty) java.nio.file.Files.deleteIfExists(dir.resolve("PROPS"))
-    else java.nio.file.Files.writeString(dir.resolve("PROPS"),
-      next.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"$k=$v" }.mkString("\n"))
+    if (next.isEmpty) Files.deleteIfExists(dir.resolve("PROPS"))
+    else Fs.publish(dir, "PROPS", next.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"$k=$v" }.mkString("\n"))
   }
 
   private[sources] def readProps(path: String): Map[String, String] = {
@@ -913,7 +903,7 @@ class DocStoreStagedTable(staging: Path, finalDir: Path,
       // CREATE intent but the target appeared while the query ran: a
       // concurrent CREATE committed first. Taking the replace branch
       // here would silently destroy their table — fail instead.
-      graft.core.Fs.deleteRecursively(staging)
+      Fs.deleteRecursively(staging)
       throw new IllegalStateException(
         s"table at $finalDir was created concurrently while this " +
           "CREATE TABLE AS SELECT ran; the staged result was discarded")
@@ -959,11 +949,11 @@ class DocStoreStagedTable(staging: Path, finalDir: Path,
       // against the old manifest can still finish its scan; vacuum is
       // the explicit reclaimer of now-unreferenced files.
       DocStoreCommitOps.writeManifest(finalDir.toString, renamed, "rtas")
-      graft.core.Fs.deleteRecursively(staging)
+      Fs.deleteRecursively(staging)
     }
 
   override def abortStagedChanges(): Unit =
-    graft.core.Fs.deleteRecursively(staging)
+    Fs.deleteRecursively(staging)
 }
 
 /** Catalog-loaded docstore table: everything [[DocStoreTable]] does,
@@ -1101,12 +1091,8 @@ class DocStoreSqlTable(path: String, manifest: String = "MANIFEST")
       DocStoreCommitOps.persistPartNumberFloor(path)
       DocStoreCommitOps.clearVersions(path)
       DocStoreCommitOps.writeManifest(path, Seq.empty, "truncate-sql")
-      import scala.jdk.CollectionConverters._
-      val stream = Files.walk(Paths.get(path))
-      try stream.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".gds"))
-        .toVector.foreach(Files.deleteIfExists(_))
-      finally stream.close()
+      Fs.walk(Paths.get(path)).filter(_.getFileName.toString.endsWith(".gds"))
+        .foreach(Files.deleteIfExists(_))
     }
     true
   }

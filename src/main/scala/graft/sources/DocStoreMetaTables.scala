@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -150,24 +148,14 @@ class DocStoreMetaTable(path: String, kind: String)
     * vec-col dir with no published manifest) is unreachable state and
     * is skipped, matching every other reader. */
   private def annRows(): Array[InternalRow] = {
-    val annRoot = Paths.get(path, "_ann")
-    if (!Files.exists(annRoot)) return Array.empty
-    val cols = {
-      val l = Files.list(annRoot)
-      try {
-        import scala.jdk.CollectionConverters._
-        l.iterator().asScala.map(_.getFileName.toString).toVector.sorted
-      } finally l.close()
-    }
-    cols.filter(c => new AnnIndex.Manifest(annRoot.resolve(c)).exists)
-      .flatMap { c =>
-        AnnIndex.detail(path, c).map { d =>
-          new GenericInternalRow(Array[Any](
-            UTF8String.fromString(c), UTF8String.fromString(d.scope),
-            d.synced, d.cells, d.fragments, d.tombstones,
-            d.folds)): InternalRow
-        }
-      }.toArray
+    AnnIndex.publishedColumns(path).flatMap { c =>
+      AnnIndex.detail(path, c).map { d =>
+        new GenericInternalRow(Array[Any](
+          UTF8String.fromString(c), UTF8String.fromString(d.scope),
+          d.synced, d.cells, d.fragments, d.tombstones,
+          d.folds)): InternalRow
+      }
+    }.toArray
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =

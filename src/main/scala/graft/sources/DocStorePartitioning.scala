@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference, Transform}
 import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, In, IsNotNull, IsNull}
@@ -148,10 +148,7 @@ object DocStorePartitioning {
       case PIdentity(c) => s"identity,$c"
       case PBucket(c, n) => s"bucket,$c,$n"
     }
-    val tmp = dir.resolve(s".$FILE-tmp")
-    Files.writeString(tmp, lines.mkString("\n"))
-    Files.move(tmp, dir.resolve(FILE),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    graft.core.Fs.publish(dir, FILE, lines.mkString("\n"))
   }
 
   /** Empty for unpartitioned tables (no `PARTITIONING` file). */

@@ -2,8 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
@@ -93,13 +91,9 @@ class VacuumProcedure(catalog: DocStoreCatalog) extends DocStoreProcedure {
       // tables keep segments in per-partition subdirectories, and the
       // manifest records `p=<val>/part-N.gds` — a basename-keyed check
       // would treat every partitioned segment as dead
-      val stream = Files.walk(dir)
-      val deadWalk =
-        try stream.iterator().asScala
-          .filter(p => p.getFileName.toString.endsWith(".gds") &&
-            !live(dir.relativize(p).toString.replace('\\', '/')))
-          .toVector
-        finally stream.close()
+      val deadWalk = graft.core.Fs.walk(dir)
+        .filter(p => p.getFileName.toString.endsWith(".gds") &&
+          !live(dir.relativize(p).toString.replace('\\', '/')))
       // The walk is the one vacuum step whose duration scales with
       // table size — a holder stalled in it past the steal TTL could
       // wake to a STOLEN lock and a stealer's already-published
@@ -1211,12 +1205,8 @@ class CloneProcedure(catalog: DocStoreCatalog) extends DocStoreProcedure {
       }
       // nested-codec generation archives: cloned old-generation
       // segments keep decoding by their write-time schemas
-      val genFiles = Files.list(src)
-      try genFiles.iterator().asScala
-        .filter(_.getFileName.toString.matches("^SCHEMA\\.gen-\\d+$"))
-        .foreach(p => Files.copy(p,
-          staging.resolve(p.getFileName.toString)))
-      finally genFiles.close()
+      graft.core.Fs.numbered(src, "SCHEMA.gen-").map(g => s"SCHEMA.gen-$g")
+        .foreach(f => Files.copy(src.resolve(f), staging.resolve(f)))
       cloneSchema match {
         case Some(s) if s != DocStore.SCHEMA =>
           DocStore.writeSchemaFile(staging.toString, s)
